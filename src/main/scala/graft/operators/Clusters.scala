@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * partitioned ONCE (hash(dst), partitioning-preserving checkpoint) — each
   * iteration is a co-partitioned join plus one map-side-combined min-label
   * aggregation, so only label-table-shaped bytes shuffle per round; the
-  * edges never re-exchange. No driver-side graph ever materializes. Convergence
-  * is O(cluster diameter) iterations, and near-dup clusters are shallow
-  * (dense blobs around a template, diameter ≲ 4), so 3-5 rounds settle
-  * real corpora. Each round is `localCheckpoint`ed: iterative plans
+  * edges never re-exchange. No driver-side graph materializes past the
+  * `DriverGraph` bound. Convergence is O(cluster diameter) iterations,
+  * and near-dup clusters are shallow (dense blobs around a template,
+  * diameter ≲ 4), so 3-5 rounds settle real corpora. Each round is `localCheckpoint`ed: iterative plans
   * otherwise grow lineage exponentially and re-execute the whole history
   * every round. For adversarially deep graphs (long chains), use
   * `connectedComponentsStar` — the large-star/small-star rewrite [Kiveris
@@ -30,22 +30,28 @@ object Clusters {
     * Deterministic; `maxIter` bounds the worst case and the fixpoint check
     * stops early (almost always) before it.
     *
-    * Adaptive: near-dup pair lists are usually minuscule relative to the
-    * corpus that produced them (dup rate × corpus, already aggregated to
-    * pairs), so when the deduped edge list is at most
-    * `driverFallbackEdges` the graph is collected and solved with
-    * in-memory union-find — one job instead of 2 per propagation round.
-    * The size gate is one count() — which is also the job that
-    * materializes the lazy edge checkpoint every downstream path reuses,
-    * so it is not an extra scan — and nothing is collected to the driver
-    * unless the list is already known to be small. Results are identical
-    * on both paths (min-reachable-id), spec-pinned.
+    * Near-dup pair lists are usually minuscule relative to the corpus
+    * that produced them, so a small edge list is solved in driver memory
+    * by union-find (`DriverGraph` — one job instead of 2 per propagation
+    * round); results are identical on both paths, spec-pinned.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 15, driverFallbackEdges: Long = 4000000L,
+      maxIter: Int = 15, bucketedAtEdges: Long = Graph.BucketedPinAtEdges,
+      edgeCountHint: Option[Long] = None): DataFrame =
+    components(pairs, aCol, bCol, maxIter, bucketedAtEdges, edgeCountHint,
+      offload = true)
+
+  /** The specs' reference: `connectedComponents` without the offload. */
+  private[graft] def connectedComponentsDistributed(pairs: DataFrame,
+      aCol: String, bCol: String, maxIter: Int = 15,
       bucketedAtEdges: Long = Graph.BucketedPinAtEdges,
-      edgeCountHint: Option[Long] = None): DataFrame = {
-    require(driverFallbackEdges < Int.MaxValue, "fallback threshold must fit an Int")
+      edgeCountHint: Option[Long] = None): DataFrame =
+    components(pairs, aCol, bCol, maxIter, bucketedAtEdges, edgeCountHint,
+      offload = false)
+
+  private def components(pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int, bucketedAtEdges: Long, edgeCountHint: Option[Long],
+      offload: Boolean): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("src"),
                            col(bCol).cast("long").as("dst"))
     val derived = fwd
@@ -59,7 +65,7 @@ object Clusters {
     // itself the OOM (measured: the 240M-edge sf10 purchase graph cannot
     // even finish the checkpoint at 8 GiB, while the bucketed write
     // streams through). The hint skips the checkpoint AND the driver
-    // fallback gate (both are about small graphs).
+    // offload gate (both are about small graphs).
     if (edgeCountHint.exists(_ >= bucketedAtEdges))
       return propagateLoop(
         graft.plans.PlanBarriers.pinBucketed(derived, "dst",
@@ -72,17 +78,16 @@ object Clusters {
     // label-table-sized aggregation, never the edges.
     var edges = graft.plans.PlanBarriers.ckptKeepPartitioning(derived)
 
-    // size gate (the checkpoint above already materialized the edges, so
-    // this count is metadata-cheap); nothing lands on the driver unless
-    // the edge list is already known to be small
+    // the checkpoint above already materialized the edges, so this count
+    // is metadata-cheap
     val probeCount = edges.count()
-    if (probeCount <= driverFallbackEdges)
-      return unionFindLocal(
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))),
+    // see DriverGraph
+    if (offload && DriverGraph.fits(probeCount, probeCount))
+      return unionFindLocal(DriverGraph.collect(edges, "src", "dst"),
         pairs.sparkSession)
     // past the bucketed threshold, RE-pin the edge set as a bucketed
     // persisted table (cluster-survivable, zero storage-memory — see
-    // PlanBarriers.pinBucketed): the same count that ran the fallback
+    // PlanBarriers.pinBucketed): the same count that ran the offload
     // gate selects the pin currency, and the one-time write reads from
     // the already-materialized checkpoint, not the raw pair derivation.
     // Every round's join stays exchange-free on the edge side under
@@ -160,20 +165,21 @@ object Clusters {
     * the min-label loop). Output matches `connectedComponents` exactly
     * (spec-pinned, including deep-chain adversaries).
     *
-    * Adaptive like `connectedComponents` (r15, guide §1.2 "the
-    * distributed algorithm" — don't run one where none is needed): below
-    * the same counted `driverFallbackEdges` gate the canonical edge list
-    * plus node set are collected and solved with in-memory union-find.
-    * A StarProbe decomposition at sf0.1 measured the distributed loop's
-    * cost as ~0.6-1.1 s PER ROUND of pure scheduling/planning over a
-    * 256-edge set — the rewrite only earns its rounds when the edge list
-    * is too big to collect. Results are identical on both paths
-    * (min-reachable-id; the spec pins fallback === distributed on chains,
-    * blobs, self-loops, and random graphs).
+    * Small graphs are solved in driver memory by union-find like
+    * `connectedComponents` (`DriverGraph`; the per-round cost it avoids
+    * was measured on this loop).
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
-      maxIter: Int = 25, driverFallbackEdges: Long = 4000000L): DataFrame = {
-    require(driverFallbackEdges < Int.MaxValue, "fallback threshold must fit an Int")
+      maxIter: Int = 25): DataFrame =
+    star(pairs, aCol, bCol, maxIter, offload = true)
+
+  /** The specs' reference: `connectedComponentsStar` without the offload. */
+  private[graft] def connectedComponentsStarDistributed(pairs: DataFrame,
+      aCol: String, bCol: String, maxIter: Int = 25): DataFrame =
+    star(pairs, aCol, bCol, maxIter, offload = false)
+
+  private def star(pairs: DataFrame, aCol: String, bCol: String,
+      maxIter: Int, offload: Boolean): DataFrame = {
     val raw = pairs.select(col(aCol).cast("long").as("u"),
                            col(bCol).cast("long").as("v"))
     // node set from the UNFILTERED pairs: a self-loop-only node is still a
@@ -210,22 +216,13 @@ object Clusters {
     // are partition-count-invariant (suite-enforced).
     val spark = pairs.sparkSession
     val nEdges = edges.count()
-    // counted driver fallback (see scaladoc): the same ≤-threshold gate
-    // as connectedComponents — nothing lands on the driver unless the
-    // edge list is already known to be small. The node set rides along
-    // because canonical star edges exclude self-loops: a self-loop-only
-    // node must still come back as its own singleton cluster. That same
-    // stripping means nNodes is NOT bounded by nEdges (a self-loop-heavy
-    // pair list can have ~0 canonical edges and arbitrarily many nodes),
-    // so the node set gets its own counted gate before anything is
-    // collected; 2·threshold is the max a gate-passing edge list could
-    // produce by itself, so ordinary graphs are unaffected. The count
-    // materializes the lazy node checkpoint the collect reads anyway.
-    if (nEdges <= driverFallbackEdges &&
-        nodes.count() <= 2L * driverFallbackEdges)
+    // see DriverGraph: the node set rides along because canonical star
+    // edges exclude self-loops, and its count (which materializes the
+    // lazy node checkpoint the collect reads anyway) runs only once the
+    // edge test has passed
+    if (offload && DriverGraph.fits(nEdges, nodes.count()))
       return unionFindLocal(
-        edges.collect().map(r => (r.getLong(0), r.getLong(1))), spark,
-        allNodes = nodes.collect().map(_.getLong(0)))
+        DriverGraph.collect(edges, "u", "v", nodes = Some(nodes)), spark)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
       graft.streaming.StreamScale.parts(nEdges, rowsPerPart = 250000L,
@@ -286,36 +283,29 @@ object Clusters {
       .select(col("node"), coalesce(col("cluster_id"), col("node")).as("cluster_id"))
   }
 
-  /** In-memory union-find (path compression + union-by-min) over a
-    * collected edge list; representative = min id, matching the
-    * distributed path exactly. `allNodes` adds edge-less nodes (the star
-    * path strips self-loops from its canonical edges) as singletons.
+  /** In-memory union-find (path compression + union-by-min) over an
+    * interned edge list; int order is id order, so the representative is
+    * the min id, matching the distributed paths exactly. Rows come out in
+    * node order.
     */
-  private def unionFindLocal(es: Array[(Long, Long)],
-      spark: org.apache.spark.sql.SparkSession,
-      allNodes: Array[Long] = Array.empty): DataFrame = {
+  private def unionFindLocal(g: DriverGraph.Interned,
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
     import spark.implicits._
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    allNodes.foreach(n => parent.getOrElseUpdate(n, n))
-    def find(x: Long): Long = {
+    val parent = Array.range(0, g.ids.length)
+    def find(x: Int): Int = {
       var r = x
-      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      while (parent(r) != r) r = parent(r)
       var c = x
-      while (parent.getOrElse(c, c) != c) {
-        val nxt = parent.getOrElse(c, c); parent(c) = r; c = nxt
-      }
+      while (parent(c) != r) { val nxt = parent(c); parent(c) = r; c = nxt }
       r
     }
-    es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a)
-      parent.getOrElseUpdate(b, b)
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) {
-        if (ra < rb) parent(rb) = ra else parent(ra) = rb
-      }
+    var i = 0
+    while (i < g.src.length) {
+      val ra = find(g.src(i)); val rb = find(g.dst(i))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      i += 1
     }
-    parent.keys.toSeq.sorted
-      .map(n => (n, find(n)))
+    g.ids.indices.map(k => (g.ids(k), g.ids(find(k))))
       .toDF("node", "cluster_id")
   }
 

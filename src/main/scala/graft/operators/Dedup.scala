@@ -31,30 +31,14 @@ object Dedup {
     * explode, re-evaluating the (non-codegen) HOF pipeline several times
     * per row — measured 20× slower than the barrier'd plan.
     */
-  /** Barrier storage currency, size-gated (r15, VERDICT r14 task 1): the
-    * default lazy `localCheckpoint` pins DESERIALIZED row blocks on the
-    * JVM heap (MEMORY_AND_DISK), which is the right currency up to ~sf10
-    * but at the third decade the shingle and rare-index barriers hold
-    * multi-GB of heap objects — the sf100 probe's heap-OOM under a WIDER
-    * shuffle was this pressure, not candidate growth (candidate mass is
-    * measured EXACTLY linear: 1.25M/12.5M/125M/1.25B pair rows across
-    * sf0.1→sf100, DuckDB-recomputed). Past the gate the barrier keeps its
-    * role (single execution + HOF-inlining fence) but stores serialized
-    * DISK_ONLY blocks — zero heap residency, streaming reads.
-    */
-  private def barrier(docs: DataFrame)(df: DataFrame): DataFrame =
-    if (docs.queryExecution.optimizedPlan.stats.sizeInBytes > (128L << 20))
-      df.localCheckpoint(eager = false,
-        storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    else df.localCheckpoint(eager = false)
-
   private[graft] def shingleSets(docs: DataFrame, n: Int,
       idCol: String, textCol: String): DataFrame = {
     graft.plans.GraftFunctions.ensure(docs.sparkSession)
-    barrier(docs)(
+    graft.plans.PlanBarriers.lazyPin(
       docs.select(col(idCol).as("doc_id"), tokens(col(textCol)).as("toks"))
         .select(col("doc_id"),
-          graft.plans.GraftColumns.shingleHashSet(col("toks"), n).as("ss")))
+          graft.plans.GraftColumns.shingleHashSet(col("toks"), n).as("ss")),
+      sizedBy = docs)
   }
 
   /** Exact dedup: group by normalized-content fingerprint, keep the lowest
@@ -133,7 +117,7 @@ object Dedup {
     // positional filters — both ride ONE Window node (same partition,
     // same sort; nr as an unbounded frame over the sorted spec instead
     // of a second unordered window, which would plan its own pass).
-    val rare = barrier(docs)(ex
+    val rare = graft.plans.PlanBarriers.lazyPin(ex
       .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
       .filter(col("df") <= maxShingleDf)
       .drop("df")
@@ -141,7 +125,8 @@ object Dedup {
         Window.partitionBy("doc_id").orderBy("s")
           .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)))
       .withColumn("rn",
-        row_number().over(Window.partitionBy("doc_id").orderBy("s"))))
+        row_number().over(Window.partitionBy("doc_id").orderBy("s"))),
+      sizedBy = docs)
     // PREFIX FILTER on the candidate join's a side (r16 — the same
     // PPJoin-family prefix-filtering principle containmentPairs carries,
     // specialized to Jaccard; guide §3.2 "reduce the big side before
@@ -284,12 +269,13 @@ object Dedup {
     // double-execution reason as the Jaccard op. The prefix rank is also
     // folded INTO the barrier so its doc_id exchange+sort is paid once at
     // checkpoint build instead of per consumer.
-    val rare = barrier(docs)(ex
+    val rare = graft.plans.PlanBarriers.lazyPin(ex
       .withColumn("df", count(lit(1)).over(Window.partitionBy("s")))
       .filter(col("df") <= maxShingleDf)
       .drop("df")
       .withColumn("rn",
-        row_number().over(Window.partitionBy("doc_id").orderBy("s"))))
+        row_number().over(Window.partitionBy("doc_id").orderBy("s"))),
+      sizedBy = docs)
     // prefix side: first L rare shingles per doc, ascending hash order.
     // The epsilon guard keeps ceil() exact when t·ns is a true integer that
     // floating point represents as 27.000000000000004 — without it L would

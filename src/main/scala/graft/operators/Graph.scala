@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.plans.PlanBarriers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -78,10 +79,6 @@ object Graph {
     */
   val BucketedPinAtEdges: Long = 2000000000L
 
-  // partitioning-preserving barrier shared by all iterative operators
-  private def ckptKeepPartitioning(df: DataFrame): DataFrame =
-    graft.plans.PlanBarriers.ckptKeepPartitioning(df)
-
   /** Edge set packed for iteration: (src, outdeg, nbrs) — hash-partitioned
     * on src, with the partitioning-preserving checkpoint so every
     * iteration re-reads the packed arrays CO-PARTITIONED, never the raw
@@ -140,9 +137,9 @@ object Graph {
     // under BOTH, plan-pinned)
     def pin(adj: DataFrame): DataFrame =
       if (nEdges >= bucketedAtEdges)
-        graft.plans.PlanBarriers.pinBucketed(adj, "src",
+        PlanBarriers.pinBucketed(adj, "src",
           name = "pagerank_adj", buckets = width)
-      else ckptKeepPartitioning(adj)
+      else PlanBarriers.ckptKeepPartitioning(adj)
     if (maxOut <= maxNbrs)
       // sub-threshold keeps the recorded groupBy plan (partial agg below
       // the exchange); past it the explicit repartition fixes the
@@ -192,74 +189,65 @@ object Graph {
     * edge list. `edges` must carry BIGINT `src`, `dst` columns and hold
     * no dangling nodes (every src also appears as a dst — true for any
     * symmetrized graph). Returns (node, rank_fp).
+    *
+    * When the caller's `edgeCountHint` (an UPPER bound) admits it, the
+    * graph is solved in driver memory (`DriverGraph`), bit-identical to
+    * the distributed loop; without a hint it never offloads.
     */
   def pageRankFixedPoint(edges: DataFrame, nNodes: Long,
       iterations: Int = 5, maxNbrs: Int = PageRankMaxNbrs,
       bucketedAtEdges: Long = BucketedPinAtEdges,
       maxOutdegHint: Option[Long] = None,
-      edgeCountHint: Option[Long] = None,
-      driverFallbackEdges: Long = 4000000L): DataFrame = {
+      edgeCountHint: Option[Long] = None): DataFrame = {
+    require(nNodes > 0, "empty graph")
+    if (edgeCountHint.exists(h => DriverGraph.fits(h, nNodes)) &&
+        iterations >= 1)
+      pageRankLocal(DriverGraph.collect(edges, "src", "dst"), nNodes,
+        iterations, edges.sparkSession)
+    else pageRankDistributed(edges, nNodes, iterations, maxNbrs,
+      bucketedAtEdges, maxOutdegHint, edgeCountHint)
+  }
+
+  /** The in-memory iterations: every operation (r DIV outdeg,
+    * base + (85·cs) DIV 100) is the distributed superstep's positive-long
+    * integer arithmetic; hub salting changes only the distributed row
+    * layout, never the arithmetic.
+    */
+  private def pageRankLocal(g: DriverGraph.Interned, nNodes: Long,
+      iterations: Int, spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val init = Scale / nNodes
+    val base = (15L * init) / 100L
+    val n = g.ids.length
+    val outdeg = new Array[Long](n)
+    g.src.foreach(u => outdeg(u) += 1L)
+    var r = Array.fill(n)(init)
+    var it = 0
+    while (it < iterations) {
+      val cs = new Array[Long](n)
+      var j = 0
+      while (j < g.src.length) {
+        cs(g.dst(j)) += r(g.src(j)) / outdeg(g.src(j)); j += 1
+      }
+      // the distributed superstep emits rank rows only for aggregation
+      // KEYS (dst nodes); on a symmetrized graph that is every node, the
+      // precondition pageRankFixedPoint already demands (no dangling
+      // nodes), so updating all n slots is the same row set
+      r = Array.tabulate(n)(k => base + (85L * cs(k)) / 100L)
+      it += 1
+    }
+    import spark.implicits._
+    g.ids.indices.map(k => (g.ids(k), r(k))).toDF("node", "rank_fp")
+  }
+
+  /** The specs' reference: `pageRankFixedPoint` without the offload. */
+  private[graft] def pageRankDistributed(edges: DataFrame, nNodes: Long,
+      iterations: Int = 5, maxNbrs: Int = PageRankMaxNbrs,
+      bucketedAtEdges: Long = BucketedPinAtEdges,
+      maxOutdegHint: Option[Long] = None,
+      edgeCountHint: Option[Long] = None): DataFrame = {
     require(nNodes > 0, "empty graph")
     val init = Scale / nNodes
     val base = (15L * init) / 100L
-    // Counted driver fast path (r16, VERDICT r15 task 5 — guide §1.2
-    // "don't run a distributed algorithm where none is needed", the same
-    // gate family as Clusters.connectedComponents): the distributed loop
-    // costs ~7 serial jobs (adjacency pin + 5 supersteps, each a
-    // checkpoint materialization) of pure per-stage scheduling when the
-    // graph is small — the StarProbe-measured per-round floor. When the
-    // caller's edge-count UPPER BOUND is at most `driverFallbackEdges`,
-    // the edge list is collected and the five fixed-point iterations run
-    // in-memory over compacted int ids; every operation (r DIV outdeg,
-    // base + (85·cs) DIV 100) is the identical positive-long integer
-    // arithmetic, so ranks are bit-equal to the distributed path
-    // (spec-pinned, hub salting included — salting never changes the
-    // arithmetic, only the distributed row layout). Gate discipline: only
-    // a caller-supplied bound triggers the collect — no hint, no
-    // fallback — so nothing lands on the driver unless the caller already
-    // knows the graph is small.
-    if (edgeCountHint.exists(h => h <= driverFallbackEdges) &&
-        iterations >= 1) {
-      val spark = edges.sparkSession
-      val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .collect()
-      val idx = new java.util.HashMap[Long, Int](es.length * 2)
-      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
-      def intern(x: Long): Int = {
-        val cur = idx.getOrDefault(x, -1)
-        if (cur >= 0) cur
-        else { val nid = ids.length; idx.put(x, nid); ids += x; nid }
-      }
-      val srcs = new Array[Int](es.length)
-      val dsts = new Array[Int](es.length)
-      var i = 0
-      while (i < es.length) {
-        srcs(i) = intern(es(i).getLong(0))
-        dsts(i) = intern(es(i).getLong(1))
-        i += 1
-      }
-      val n = ids.length
-      val outdeg = new Array[Long](n)
-      i = 0; while (i < es.length) { outdeg(srcs(i)) += 1L; i += 1 }
-      var r = Array.fill(n)(init)
-      var it = 0
-      while (it < iterations) {
-        val cs = new Array[Long](n)
-        var j = 0
-        while (j < es.length) {
-          cs(dsts(j)) += r(srcs(j)) / outdeg(srcs(j)); j += 1
-        }
-        // the distributed superstep emits rank rows only for aggregation
-        // KEYS (dst nodes); on a symmetrized graph that is every node, the
-        // precondition pageRankFixedPoint already demands (no dangling
-        // nodes), so updating all n slots is the same row set
-        r = Array.tabulate(n)(k => base + (85L * cs(k)) / 100L)
-        it += 1
-      }
-      import spark.implicits._
-      return ids.indices.map(k => (ids(k), r(k)))
-        .toDF("node", "rank_fp")
-    }
     val adj = pageRankAdjacency(edges, maxNbrs, bucketedAtEdges,
       maxOutdegHint, edgeCountHint)
     // init ranks are a projection OF the adjacency (same rows, same
@@ -274,7 +262,8 @@ object Graph {
       // partitioning-preserving cut: the next superstep's join sees this
       // rank vector hash(node) == hash(src) and exchanges NOTHING — the
       // groupBy partial-sum exchange is the loop's only shuffle
-      ranks = ckptKeepPartitioning(pageRankIterate(adj, ranks, base))
+      ranks = PlanBarriers.ckptKeepPartitioning(
+        pageRankIterate(adj, ranks, base))
     }
     ranks.select(col("node"), col("r").as("rank_fp"))
   }
@@ -298,8 +287,16 @@ object Graph {
     * row (n_nodes, n_edges, n_wedges, n_triangles), all exact BIGINTs.
     */
   def triangleCount(edges: DataFrame,
-      compactIds: Option[Boolean] = None,
-      driverFallbackEdges: Long = 4000000L): DataFrame = {
+      compactIds: Option[Boolean] = None): DataFrame =
+    triangles(edges, compactIds, offload = true)
+
+  /** The specs' reference: `triangleCount` without the offload. */
+  private[graft] def triangleCountDistributed(edges: DataFrame,
+      compactIds: Option[Boolean] = None): DataFrame =
+    triangles(edges, compactIds, offload = false)
+
+  private def triangles(edges: DataFrame, compactIds: Option[Boolean],
+      offload: Boolean): DataFrame = {
     graft.plans.GraftFunctions.ensure(edges.sparkSession)
     // Adaptive element width: when every node id fits an int, the WHOLE
     // pipeline runs at 4-byte ids — the dominant cost at scale is the
@@ -331,115 +328,24 @@ object Graph {
     // r15/graph_triangles_before.txt). Exchange reuse deduplicates the
     // map sides at runtime, but every post-exchange stage and the AQE
     // re-planning of each duplicate still ran per branch. One barrier per
-    // shared frame executes it once. Size-gated storage currency exactly
-    // like Dedup.barrier: lazy heap checkpoint at bench scale, DISK_ONLY
-    // streaming blocks past 128 MB of input stats — the r12 eager-
-    // checkpoint OOM at sf10 was MEMORY-pinned blocks starving the
-    // aggregation, which the serialized currency avoids.
-    def barrier(df: DataFrame): DataFrame =
-      if (edges.queryExecution.optimizedPlan.stats.sizeInBytes > (128L << 20))
-        df.localCheckpoint(eager = false,
-          storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      else df.localCheckpoint(eager = false)
-    val e = barrier(edges
+    // shared frame executes it once, its storage currency sized by the
+    // input edges (PlanBarriers.lazyPin).
+    val e = PlanBarriers.lazyPin(edges
       .select(least(col("src"), col("dst")).cast(idT).as("a"),
         greatest(col("src"), col("dst")).cast(idT).as("b"))
       .filter(col("a") =!= col("b"))
-      .distinct())
-    // Counted driver fast path (r16 — guide §1.2 "don't run a distributed
-    // algorithm where none is needed"; the same counted-collect gate family
-    // as Clusters.connectedComponents and pageRankFixedPoint): the
-    // distributed pipeline below is ~8 serial stages (two degree joins, an
-    // adjacency build, the closing join, four scalar combines) of pure
-    // per-stage scheduling floor when the graph is small — the r15 scaling
-    // block measured graph_triangles FASTER on 8 cores than 32 at sf0.1.
-    // The gate count is NOT extra work: n_edges is one of the four outputs,
-    // and counting it here materializes the same `e` barrier either path
-    // reads. The collect is bounded by the gate (canonical non-self-loop
-    // edges, so nodes ≤ 2·nEdges — the node-set hole the star-CC gate had
-    // to close separately cannot occur). Every driver operation (degree
-    // orientation, per-apex sorted-intersection count, C(d,2) wedge sum)
-    // is the identical exact integer arithmetic, so all four counts are
-    // bit-equal to the distributed path — spec-pinned, including forcing
-    // the distributed path with driverFallbackEdges = 0.
+      .distinct(), sizedBy = edges)
+    // The offload gate's count is NOT extra work: n_edges is one of the
+    // four outputs, and counting it materializes the same `e` barrier
+    // either path reads. Canonical non-self-loop edges bound the nodes by
+    // 2·nE. See DriverGraph.
     val nE = e.count()
-    if (nE > 0 && nE <= driverFallbackEdges) {
-      val spark = edges.sparkSession
-      val rows = e.select(col("a").cast("long"), col("b").cast("long"))
-        .collect()
-      val idx = new java.util.HashMap[Long, Int](rows.length * 2)
-      var nNode = 0
-      def intern(x: Long): Int = {
-        val cur = idx.getOrDefault(x, -1)
-        if (cur >= 0) cur else { val nid = nNode; idx.put(x, nid); nNode += 1; nid }
-      }
-      val ea = new Array[Int](rows.length)
-      val eb = new Array[Int](rows.length)
-      var i = 0
-      while (i < rows.length) {
-        ea(i) = intern(rows(i).getLong(0)); eb(i) = intern(rows(i).getLong(1))
-        i += 1
-      }
-      // undirected degrees over the canonical edge set
-      val deg = new Array[Int](nNode)
-      i = 0; while (i < rows.length) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
-      // degree orientation: src = the (degree, id)-smaller endpoint. The
-      // id tie-break compares ORIGINAL ids, and e is canonical (a < b), so
-      // on equal degrees the a side wins — same rule as the `fwd` column.
-      val outdeg = new Array[Int](nNode)
-      val src = new Array[Int](rows.length)
-      val dst = new Array[Int](rows.length)
-      i = 0
-      while (i < rows.length) {
-        val fwd = deg(ea(i)) < deg(eb(i)) || deg(ea(i)) == deg(eb(i))
-        src(i) = if (fwd) ea(i) else eb(i)
-        dst(i) = if (fwd) eb(i) else ea(i)
-        outdeg(src(i)) += 1
-        i += 1
-      }
-      // out-adjacency as offset-packed segments, each sorted (interned-id
-      // order — intersection COUNTS are invariant under any consistent
-      // relabeling, and only counts leave the driver)
-      val off = new Array[Int](nNode + 1)
-      i = 0; while (i < nNode) { off(i + 1) = off(i) + outdeg(i); i += 1 }
-      val fill = java.util.Arrays.copyOf(off, nNode)
-      val nbrs = new Array[Int](rows.length)
-      i = 0
-      while (i < rows.length) {
-        nbrs(fill(src(i))) = dst(i); fill(src(i)) += 1; i += 1
-      }
-      i = 0
-      while (i < nNode) {
-        java.util.Arrays.sort(nbrs, off(i), off(i + 1)); i += 1
-      }
-      var nWedge = 0L
-      i = 0
-      while (i < nNode) {
-        val d = outdeg(i).toLong; nWedge += (d * (d - 1L)) >> 1; i += 1
-      }
-      // per oriented edge (u, v): triangles through it = |N⁺(u) ∩ N⁺(v)|
-      // (linear merge over the two sorted segments — the same kernel as
-      // the distributed sorted_intersect_size)
-      var nTri = 0L
-      i = 0
-      while (i < rows.length) {
-        var p = off(src(i)); val pEnd = off(src(i) + 1)
-        var q = off(dst(i)); val qEnd = off(dst(i) + 1)
-        while (p < pEnd && q < qEnd) {
-          val x = nbrs(p); val y = nbrs(q)
-          if (x == y) { nTri += 1; p += 1; q += 1 }
-          else if (x < y) p += 1
-          else q += 1
-        }
-        i += 1
-      }
-      import spark.implicits._
-      return Seq((nNode.toLong, nE, nWedge, nTri))
-        .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
-    }
-    val deg = barrier(e.select(col("a").as("n"))
+    if (offload && DriverGraph.fits(nE, 2L * nE))
+      return triangleCountLocal(DriverGraph.collect(e, "a", "b"),
+        edges.sparkSession)
+    val deg = PlanBarriers.lazyPin(e.select(col("a").as("n"))
       .unionAll(e.select(col("b").as("n")))
-      .groupBy(col("n")).agg(count(lit(1)).as("d")))
+      .groupBy(col("n")).agg(count(lit(1)).as("d")), sizedBy = edges)
     // shuffled-hash build on the |V|-row degree side both times — SMJ
     // would sort the |E|-row edge stream twice for joins whose build
     // side is a narrow per-task map (same discipline as the PageRank
@@ -469,15 +375,17 @@ object Graph {
     // carried, packed ~30× fewer rows.
     // barrier'd: referenced by the wedge count and BOTH sides of the
     // closing join (three plan branches)
-    val adj = barrier(oriented.groupBy(col("src"))
-      .agg(sort_array(collect_list(col("dst"))).as("nbrs")))
+    val adj = PlanBarriers.lazyPin(oriented.groupBy(col("src"))
+      .agg(sort_array(collect_list(col("dst"))).as("nbrs")), sizedBy = edges)
     // Exact BIGINT end to end: d*(d-1) is always even, so the halving is
     // done PER ROW as a bit shift (exact integer /2 for non-negatives)
     // BEFORE the sum. The previous `sum(...) / 2L` was Catalyst's Divide —
-    // double-valued — and would lose precision past 2^53 wedges.
+    // double-valued — and would lose precision past 2^53 wedges. An
+    // empty adjacency sums to NULL, so it is coalesced to the 0 the
+    // in-memory count gives.
     val nWedges = adj
-      .agg(sum(shiftright(size(col("nbrs")).cast("long") *
-        (size(col("nbrs")).cast("long") - 1L), 1))
+      .agg(coalesce(sum(shiftright(size(col("nbrs")).cast("long") *
+        (size(col("nbrs")).cast("long") - 1L), 1)), lit(0L))
         .as("n_wedges"))
     // (u, v, N⁺(u)) comes from EXPLODING adj, not from joining the
     // oriented edge list back against it: explode(nbrs) re-emits exactly
@@ -499,11 +407,77 @@ object Graph {
         .sortedIntersectSize(col("__nu"), col("__nv")).as("__t"))
       .agg(coalesce(sum(col("__t")), lit(0L)).as("n_triangles"))
     val nNodes = deg.agg(count(lit(1)).as("n_nodes"))
-    // the fast-path gate already counted the materialized `e` barrier —
+    // the offload gate already counted the materialized `e` barrier —
     // reuse it instead of re-aggregating the same blocks
     val nEdges = edges.sparkSession.range(1).select(lit(nE).as("n_edges"))
     // 1-row scalar combines (the accepted scalar-attach idiom)
     nNodes.crossJoin(broadcast(nEdges)).crossJoin(broadcast(nWedges))
       .crossJoin(broadcast(triangles))
+  }
+
+  /** The in-memory count over the canonical interned edge list: the same
+    * degree orientation, C(d,2) wedge sum and per-oriented-edge sorted
+    * intersection as the distributed pipeline, in exact integers.
+    */
+  private def triangleCountLocal(g: DriverGraph.Interned,
+      spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val n = g.ids.length
+    val m = g.src.length
+    val ea = g.src
+    val eb = g.dst
+    // undirected degrees over the canonical edge set
+    val deg = new Array[Int](n)
+    var i = 0; while (i < m) { deg(ea(i)) += 1; deg(eb(i)) += 1; i += 1 }
+    // degree orientation: src = the (degree, id)-smaller endpoint. The
+    // id tie-break compares ORIGINAL ids, and e is canonical (a < b), so
+    // on equal degrees the a side wins — same rule as the `fwd` column.
+    val outdeg = new Array[Int](n)
+    val src = new Array[Int](m)
+    val dst = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      val fwd = deg(ea(i)) < deg(eb(i)) || deg(ea(i)) == deg(eb(i))
+      src(i) = if (fwd) ea(i) else eb(i)
+      dst(i) = if (fwd) eb(i) else ea(i)
+      outdeg(src(i)) += 1
+      i += 1
+    }
+    // out-adjacency as offset-packed segments, each sorted by int id
+    val off = new Array[Int](n + 1)
+    i = 0; while (i < n) { off(i + 1) = off(i) + outdeg(i); i += 1 }
+    val fill = java.util.Arrays.copyOf(off, n)
+    val nbrs = new Array[Int](m)
+    i = 0
+    while (i < m) {
+      nbrs(fill(src(i))) = dst(i); fill(src(i)) += 1; i += 1
+    }
+    i = 0
+    while (i < n) {
+      java.util.Arrays.sort(nbrs, off(i), off(i + 1)); i += 1
+    }
+    var nWedge = 0L
+    i = 0
+    while (i < n) {
+      val d = outdeg(i).toLong; nWedge += (d * (d - 1L)) >> 1; i += 1
+    }
+    // per oriented edge (u, v): triangles through it = |N⁺(u) ∩ N⁺(v)|
+    // (linear merge over the two sorted segments — the same kernel as
+    // the distributed sorted_intersect_size)
+    var nTri = 0L
+    i = 0
+    while (i < m) {
+      var p = off(src(i)); val pEnd = off(src(i) + 1)
+      var q = off(dst(i)); val qEnd = off(dst(i) + 1)
+      while (p < pEnd && q < qEnd) {
+        val x = nbrs(p); val y = nbrs(q)
+        if (x == y) { nTri += 1; p += 1; q += 1 }
+        else if (x < y) p += 1
+        else q += 1
+      }
+      i += 1
+    }
+    import spark.implicits._
+    Seq((n.toLong, m.toLong, nWedge, nTri))
+      .toDF("n_nodes", "n_edges", "n_wedges", "n_triangles")
   }
 }

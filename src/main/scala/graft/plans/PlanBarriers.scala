@@ -21,7 +21,7 @@ object PlanBarriers {
     * can re-read after a loss, with zero storage-memory footprint — the
     * right currency once the static side stops being small. Callers
     * select by size threshold (PageRank probes |E| for free in its
-    * outdeg probe; connectedComponents reuses its fallback-gate count).
+    * outdeg probe; connectedComponents reuses its offload-gate count).
     *
     * The pin lives in the ACID store (r13, VERDICT r12 task 6): each call
     * commits one bucketed VERSION of a `_pin`-layer catalog table through
@@ -69,12 +69,12 @@ object PlanBarriers {
     * `AdaptiveSparkPlanExec`, which reports UnknownPartitioning (and
     * whose coalesced final shuffle wouldn't match `shuffle.partitions`
     * anyway). A checkpoint built under AQE therefore FORGETS it is
-    * hash(key) and every consumer re-exchanges it — measured by
-    * `graft.tools.CkptProbe`: 3 exchanges per PageRank superstep under
-    * AQE-built checkpoints, 1 with this barrier. AQE is toggled off just
-    * for the materialization (eager, so the conf is restored
-    * immediately) and restored in finally; downstream queries keep their
-    * own AQE setting. This is the Pregel load-time discipline for every
+    * hash(key) and every consumer re-exchanges it — measured (BASELINE.md,
+    * "PageRank stops re-shuffling the static edge set"): 3 exchanges per
+    * PageRank superstep under AQE-built checkpoints, 1 with this barrier.
+    * AQE is toggled off just for the materialization (eager, so the conf
+    * is restored immediately) and restored in finally; downstream queries
+    * keep their own AQE setting. This is the Pregel load-time discipline for every
     * iterative operator whose STATIC side must stay put: partition once,
     * exchange only the small per-round state.
     *
@@ -96,4 +96,30 @@ object PlanBarriers {
       try df.localCheckpoint(true) finally spark.conf.set(key, old)
     }
   }
+
+  /** Input stats size past which `lazyPin` stores DISK_ONLY blocks. */
+  private[graft] val DiskOnlyPastBytes: Long = 128L << 20
+
+  /** Lazy `localCheckpoint` whose storage currency is gated on the size of
+    * the input it derives from (r15, VERDICT r14 task 1). Callers use it
+    * as a shared-subtree barrier: a frame referenced by several plan
+    * branches (a self-join, the range sampler of a global sort, scalar
+    * combines) executes once, and no optimizer rule inlines across it.
+    *
+    * Up to `DiskOnlyPastBytes` of `sizedBy` plan stats the blocks are
+    * the default DESERIALIZED heap blocks (MEMORY_AND_DISK) — the right
+    * currency up to ~sf10. Past it they are serialized DISK_ONLY blocks:
+    * zero heap residency, streaming reads. At the third decade the dedup
+    * shingle and rare-index barriers held multi-GB of heap objects (the
+    * sf100 heap-OOM under a wider shuffle was this pressure, not
+    * candidate growth), and the r12 eager-checkpoint OOM of triangles at
+    * sf10 was memory-pinned blocks starving the downstream aggregation.
+    * `sizedBy` is the operator's own input, whose stats are known
+    * without running anything.
+    */
+  def lazyPin(df: DataFrame, sizedBy: DataFrame): DataFrame =
+    if (sizedBy.queryExecution.optimizedPlan.stats.sizeInBytes > DiskOnlyPastBytes)
+      df.localCheckpoint(eager = false,
+        storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
+    else df.localCheckpoint(eager = false)
 }

@@ -912,26 +912,21 @@ object CoreQueries {
       // rangepartitioning SAMPLES its child for split bounds, so without
       // it the window-dedup + broadcast join subtree EXECUTES TWICE — one
       // full pass for the sampler, one for the real exchange
-      // (ProfileGold: joinproj ~2.1 s, sorted ~4.6 s ≈ 2× + sort). The
-      // LAZY localCheckpoint materializes the classified pairs once; the
-      // sampler and the shuffle both read the pinned blocks. Deliberately
+      // (OPTIMIZATION_r16.md work item 3: joinproj ~2.1 s, sorted ~4.6 s
+      // ≈ 2× + sort). The LAZY localCheckpoint materializes the
+      // classified pairs once; the sampler and the shuffle both read the
+      // pinned blocks. Deliberately
       // NOT persist(): a persist barrier registers in the CacheManager
       // keyed on the logical plan, and a later identical invocation (the
       // bench's second timed rep) can silently read surviving blocks —
       // unpersist(blocking=false) races the next rep — turning a timing
       // into a cache read. The lazy checkpoint RDD is private to THIS
       // Dataset instance, so every invocation recomputes from parquet.
-      // Same size-gated storage currency as Dedup.barrier: heap blocks at
-      // bench SFs, serialized DISK_ONLY past 128 MB of input stats (the
-      // sf100 posture — the pre-sort pair set is ~1000× sf0.1's 2.7M rows
-      // and must not live on the heap).
-      val preSort =
-        if (Tables.events(s, d).queryExecution.optimizedPlan.stats.sizeInBytes
-            > (128L << 20))
-          classified.localCheckpoint(eager = false,
-            storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        else classified.localCheckpoint(eager = false)
-      preSort.orderBy(col("incident_id"), col("station_id"))
+      // Sized by the events input (PlanBarriers.lazyPin): at sf100 the
+      // pre-sort pair set is ~1000× sf0.1's 2.7M rows and must not live
+      // on the heap.
+      graft.plans.PlanBarriers.lazyPin(classified, sizedBy = Tables.events(s, d))
+        .orderBy(col("incident_id"), col("station_id"))
     },
     Some("""WITH ev AS (SELECT *, epoch_ms(ts) AS ts_ms FROM events),
             stations AS (

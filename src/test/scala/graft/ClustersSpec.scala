@@ -23,10 +23,10 @@ class ClustersSpec extends SparkSpec {
 
   test("long chain converges past one propagation round (distributed path)") {
     // path graph 0-1-2-...-40: diameter 40, min label must ripple end to
-    // end; driverFallbackEdges = 0 forces the distributed loop
+    // end through the distributed loop
     val pairs = (0L until 40L).map(i => (i, i + 1)).toDF("doc1", "doc2")
-    val got = Clusters.connectedComponents(pairs, "doc1", "doc2",
-        maxIter = 50, driverFallbackEdges = 0L)
+    val got = Clusters.connectedComponentsDistributed(pairs, "doc1", "doc2",
+        maxIter = 50)
       .as[(Long, Long)].collect()
     assert(got.length === 41 && got.forall(_._2 === 0L))
   }
@@ -39,10 +39,14 @@ class ClustersSpec extends SparkSpec {
       .toDF("doc1", "doc2")
     val fast = Clusters.connectedComponents(pairs, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
-    val dist = Clusters.connectedComponents(pairs, "doc1", "doc2",
-        maxIter = 50, driverFallbackEdges = 0L)
+    val dist = Clusters.connectedComponentsDistributed(pairs, "doc1", "doc2",
+        maxIter = 50)
       .as[(Long, Long)].collect().toMap
     assert(fast === dist)
+    // rows come out in node order on both paths
+    val fastRows = Clusters.connectedComponents(pairs, "doc1", "doc2")
+      .as[(Long, Long)].collect().toSeq
+    assert(fastRows === fastRows.sortBy(_._1))
   }
 
   test("bucketed edge pin agrees with the checkpoint pin on a random graph") {
@@ -51,17 +55,17 @@ class ClustersSpec extends SparkSpec {
       .map(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
       .filter(p => p._1 != p._2)
       .toDF("doc1", "doc2")
-    val ckpt = Clusters.connectedComponents(pairs, "doc1", "doc2",
-        maxIter = 50, driverFallbackEdges = 0L)
+    val ckpt = Clusters.connectedComponentsDistributed(pairs, "doc1", "doc2",
+        maxIter = 50)
       .as[(Long, Long)].collect().toMap
-    val bucketed = Clusters.connectedComponents(pairs, "doc1", "doc2",
-        maxIter = 50, driverFallbackEdges = 0L, bucketedAtEdges = 1L)
+    val bucketed = Clusters.connectedComponentsDistributed(pairs, "doc1",
+        "doc2", maxIter = 50, bucketedAtEdges = 1L)
       .as[(Long, Long)].collect().toMap
     assert(ckpt === bucketed, "pin currency must never change a cluster")
     // the checkpoint-free hint path (web-scale callers: the edge set is
     // too big to localCheckpoint at all — the measured sf10 shape)
-    val hinted = Clusters.connectedComponents(pairs, "doc1", "doc2",
-        maxIter = 50, driverFallbackEdges = 0L, bucketedAtEdges = 1L,
+    val hinted = Clusters.connectedComponentsDistributed(pairs, "doc1",
+        "doc2", maxIter = 50, bucketedAtEdges = 1L,
         edgeCountHint = Some(Long.MaxValue))
       .as[(Long, Long)].collect().toMap
     assert(ckpt === hinted, "the hint path must never change a cluster")
@@ -72,11 +76,10 @@ class ClustersSpec extends SparkSpec {
     val adversarial = ((0L until 64L).map(i => (i, i + 1)) ++
       Seq((200L, 201L), (200L, 202L), (201L, 202L), (202L, 203L)) ++
       Seq((900L, 901L))).toDF("doc1", "doc2")
-    // driverFallbackEdges = 0 forces the DISTRIBUTED star loop; the
-    // default exercises the counted union-find fallback — both must agree
-    // with connectedComponents everywhere
-    val star = Clusters.connectedComponentsStar(adversarial, "doc1", "doc2",
-        driverFallbackEdges = 0L)
+    // the DISTRIBUTED star loop and the public call (the driver union-find
+    // offload) must both agree with connectedComponents everywhere
+    val star = Clusters.connectedComponentsStarDistributed(adversarial,
+        "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
     val starFb = Clusters.connectedComponentsStar(adversarial, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
@@ -89,8 +92,8 @@ class ClustersSpec extends SparkSpec {
     val pairs = (1 to 300).map { _ =>
       (rnd.nextInt(120).toLong, rnd.nextInt(120).toLong)
     }.filter(p => p._1 != p._2).toDF("doc1", "doc2")
-    val starR = Clusters.connectedComponentsStar(pairs, "doc1", "doc2",
-        driverFallbackEdges = 0L)
+    val starR = Clusters.connectedComponentsStarDistributed(pairs, "doc1",
+        "doc2")
       .as[(Long, Long)].collect().toMap
     val starRFb = Clusters.connectedComponentsStar(pairs, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
@@ -102,8 +105,8 @@ class ClustersSpec extends SparkSpec {
     val selfLoop = Seq((50L, 50L), (60L, 61L)).toDF("doc1", "doc2")
     val s1 = Clusters.connectedComponentsStar(selfLoop, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
-    val s1d = Clusters.connectedComponentsStar(selfLoop, "doc1", "doc2",
-        driverFallbackEdges = 0L)
+    val s1d = Clusters.connectedComponentsStarDistributed(selfLoop, "doc1",
+        "doc2")
       .as[(Long, Long)].collect().toMap
     val s2 = Clusters.connectedComponents(selfLoop, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
@@ -111,19 +114,20 @@ class ClustersSpec extends SparkSpec {
     assert(s1 === s2)
     assert(s1d === s2)
     // self-loop-heavy adversary (r16, ADVICE r15): canonical star edges
-    // strip self-loops, so nEdges can pass the driver-fallback gate while
-    // the node set is far larger — the node-count gate must route this to
-    // the DISTRIBUTED path (driverFallbackEdges = 1 admits the 1 real
-    // edge; 2·1 = 2 < 21 nodes blocks the collect) and results must still
-    // match the plain-CC reference.
+    // strip self-loops, so 1 canonical edge carries 21 nodes (the node
+    // gate that routes such a list away from the offload is pinned in
+    // DriverGraphSpec). Both star paths must match the plain-CC reference.
     val adversary = ((100L to 118L).map(i => (i, i)) ++ Seq((200L, 201L)))
       .toDF("doc1", "doc2")
-    val aStar = Clusters.connectedComponentsStar(adversary, "doc1", "doc2",
-        driverFallbackEdges = 1L)
+    val aStar = Clusters.connectedComponentsStarDistributed(adversary,
+        "doc1", "doc2")
+      .as[(Long, Long)].collect().toMap
+    val aStarFb = Clusters.connectedComponentsStar(adversary, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
     val aRef = Clusters.connectedComponents(adversary, "doc1", "doc2")
       .as[(Long, Long)].collect().toMap
     assert(aStar === aRef)
+    assert(aStarFb === aRef)
     assert(aStar(200L) === 200L && aStar(201L) === 200L && aStar(100L) === 100L)
   }
 

@@ -110,10 +110,9 @@ class GraphSpec extends SparkSpec {
     val fast = Graph.pageRankFixedPoint(edges, nNodes, iterations = 5,
         maxNbrs = 8, edgeCountHint = Some(nEdges))
       .orderBy("node").collect().toSeq
-    // driverFallbackEdges = 0 forces the distributed loop on the same hint
-    val dist = Graph.pageRankFixedPoint(edges, nNodes, iterations = 5,
-        maxNbrs = 8, edgeCountHint = Some(nEdges),
-        driverFallbackEdges = 0L)
+    // the distributed loop on the same hint
+    val dist = Graph.pageRankDistributed(edges, nNodes, iterations = 5,
+        maxNbrs = 8, edgeCountHint = Some(nEdges))
       .orderBy("node").collect().toSeq
     assert(fast === dist, "fallback must be bit-identical to distributed")
   }
@@ -147,19 +146,26 @@ class GraphSpec extends SparkSpec {
     // random multigraph with duplicates, reversed edges and self-loops —
     // the normalization, orientation tie-breaks, wedge and triangle counts
     // must agree exactly between the in-memory fallback (default gate) and
-    // the distributed pipeline (forced with driverFallbackEdges = 0)
+    // the distributed pipeline
     val rnd = new scala.util.Random(7)
     val raw = (1 to 600).map(_ =>
       (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
     val df = raw.toDF("src", "dst")
     val fast = Graph.triangleCount(df).head()
-    val dist = Graph.triangleCount(df, driverFallbackEdges = 0L).head()
+    val dist = Graph.triangleCountDistributed(df).head()
     assert(fast === dist, "fallback must be bit-identical to distributed")
     // degree-tie orientation: a 6-cycle (all degrees equal) exercises the
     // id tie-break on every edge
     val cyc = (0L to 5L).map(i => (i, (i + 1) % 6)).toDF("src", "dst")
     assert(Graph.triangleCount(cyc).head() ===
-      Graph.triangleCount(cyc, driverFallbackEdges = 0L).head())
+      Graph.triangleCountDistributed(cyc).head())
+  }
+
+  test("triangleCount: a self-loop-only input is (0, 0, 0, 0) on both paths") {
+    val loops = Seq((1L, 1L), (2L, 2L), (2L, 2L)).toDF("src", "dst")
+    val zero = org.apache.spark.sql.Row(0L, 0L, 0L, 0L)
+    assert(Graph.triangleCount(loops).head() === zero)
+    assert(Graph.triangleCountDistributed(loops).head() === zero)
   }
 
   test("triangleCount: ids past 2^31 take the long path; all three call modes agree") {

@@ -146,15 +146,12 @@ class PlanAuditSpec extends SparkSpec {
 
   // file -> why a driver-side collect() is legitimate there
   private val acceptedCollects: Map[String, String] = Map(
-    "operators/Clusters.scala" ->
-      "driver union-find runs only under the counted <=4M-edge gate",
-    "operators/Graph.scala" ->
-      ("pageRank driver fast path collects edges only under a " +
-        "caller-supplied <=4M edge-count upper bound (r16, the Clusters " +
-        "gate family); no hint, no collect. triangleCount's fast path " +
-        "collects only under a counted <=4M canonical-edge gate (the " +
-        "count is the n_edges output, so the gate is free; nodes <= " +
-        "2*edges bounds the driver set)"),
+    "operators/DriverGraph.scala" ->
+      ("the small-graph offload of CC, star CC, PageRank and triangles " +
+        "collects only after DriverGraph.fits admits the graph: <=4M " +
+        "edges and <=8M nodes, from counts the callers already take " +
+        "(PageRank: its caller's edge-count upper bound; no hint, no " +
+        "collect)"),
     "catalog/TableCatalog.scala" ->
       "collects file NAMES for the stats manifest, never table rows",
     "Bench.scala" ->
