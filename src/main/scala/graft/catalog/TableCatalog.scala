@@ -3,6 +3,8 @@ package graft.catalog
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 
 /** Layered (bronze/silver/gold) parquet table catalog — the engine's stand-in
@@ -471,13 +473,8 @@ final class TableCatalog(spark: SparkSession, root: String,
     */
   def overwrite(df: DataFrame, layer: String, table: String,
       partitionBy: Seq[String] = Nil, statsCols: Seq[String] = Nil): Int = {
-    val prevCommitted = currentVersion(layer, table)
-    val next = prevCommitted.getOrElse(
-      versions(layer, table).lastOption.getOrElse(0)) + 1
-    val target = versionDir(layer, table, next)
-    val w = df.write.mode(SaveMode.Overwrite).format(format)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .save(target.toString)
+    val (prevCommitted, next, target) =
+      writeNextVersion(df, layer, table, partitionBy)
     // File-level min/max stats land INSIDE the version dir BEFORE the
     // pointer swap: stats are part of the committed snapshot (a reader can
     // never resolve a version whose stats are still being written), and
@@ -487,6 +484,22 @@ final class TableCatalog(spark: SparkSession, root: String,
     if (statsCols.nonEmpty) writeFileStats(target, statsCols)
     publishVersion(layer, table, next, prevCommitted)
     next
+  }
+
+  /** Write `df` as the table's next snapshot dir `_v/NNNNN`, unpublished:
+    * the pointer still names the previous version. Returns (the committed
+    * version before the write, the new version number, its dir).
+    */
+  private def writeNextVersion(df: DataFrame, layer: String, table: String,
+      partitionBy: Seq[String]): (Option[Int], Int, Path) = {
+    val prevCommitted = currentVersion(layer, table)
+    val next = prevCommitted.getOrElse(
+      versions(layer, table).lastOption.getOrElse(0)) + 1
+    val target = versionDir(layer, table, next)
+    val w = df.write.mode(SaveMode.Overwrite).format(format)
+    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+      .save(target.toString)
+    (prevCommitted, next, target)
   }
 
   /** Session-catalog identifier for one committed BUCKETED version. The
@@ -1747,21 +1760,61 @@ final class TableCatalog(spark: SparkSession, root: String,
 
   /** Overwrite only when the new snapshot is non-empty — an empty compute
     * cycle leaves the previous snapshot in place (reference:
-    * gold_batch_job.py:81-90). Uses a cheap `isEmpty` (limit-1 scan), not
-    * `count()`, and caches the input so the gate and the write don't
-    * recompute the plan twice (the reference recomputed; SURVEY.md §3.2
-    * step 5 flags it).
+    * gold_batch_job.py:81-90).
+    *
+    * Write-then-publish: the snapshot is written to `_v/NNNNN` exactly as
+    * `overwrite` writes it, and `_CURRENT` is swapped only if that
+    * snapshot holds a row. The plan runs once — no cache, no separate
+    * emptiness pass (the reference ran its plan twice; SURVEY.md §3.2
+    * step 5 flags it). For parquet the test reads footer record counts,
+    * without a Spark job, and stops at the first non-empty file; any
+    * other format reads the written dir back. An empty snapshot is
+    * deleted unpublished, along with the table and `_v` dirs when this
+    * call created them, so the pointer, `versions()` and the retention
+    * vacuum are exactly as before the call.
     *
     * @return true when a write happened
     */
   def overwriteIfNonEmpty(df: DataFrame, layer: String, table: String,
       partitionBy: Seq[String] = Nil): Boolean = {
-    val cached = df.cache()
-    try {
-      if (cached.isEmpty) false
-      else { overwrite(cached, layer, table, partitionBy); true }
-    } finally cached.unpersist()
+    val tableDir = new Path(path(layer, table))
+    val fs = hadoopFs(tableDir)
+    val created = Seq(tableDir, new Path(tableDir, "_v")).filterNot(fs.exists)
+    val (prevCommitted, next, target) =
+      writeNextVersion(df, layer, table, partitionBy)
+    if (holdsRow(target, df.schema)) {
+      publishVersion(layer, table, next, prevCommitted)
+      true
+    } else {
+      fs.delete(target, true)
+      created.reverse.foreach { d =>
+        if (fs.exists(d) && fs.listStatus(d).isEmpty) fs.delete(d, false)
+      }
+      false
+    }
   }
+
+  /** True when the snapshot written at `dir` holds at least one row. */
+  private def holdsRow(dir: Path,
+      schema: org.apache.spark.sql.types.StructType): Boolean =
+    if (format != "parquet")
+      !spark.read.format(format).schema(schema).load(dir.toString).isEmpty
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val fs = dir.getFileSystem(conf)
+      // data files as Spark lists them: `_`/`.`-prefixed names (the
+      // `_SUCCESS` marker, crc sidecars) are not part of the snapshot
+      def dataFiles(d: Path): Iterator[Path] =
+        fs.listStatus(d).iterator
+          .filterNot(st => st.getPath.getName.startsWith("_") ||
+            st.getPath.getName.startsWith("."))
+          .flatMap(st =>
+            if (st.isDirectory) dataFiles(st.getPath) else Iterator(st.getPath))
+      dataFiles(dir).exists { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+        try reader.getRecordCount > 0 finally reader.close()
+      }
+    }
 
   // ---------------------------------------------------------------- stats
 

@@ -79,48 +79,16 @@ object GoldJob {
     * ONE cell, the station's, so surviving cells stay exact). The decision
     * is made BEFORE the join from two narrow per-cell counts and the dense
     * list is count-bounded → broadcast anti join; the quadratic work is
-    * never performed. Default None = exact, zero extra cost — the
-    * production response to a tripped cap is per-cell pre-aggregation
-    * (serve "n stations alerting, max risk" for the dense cell) rather
-    * than f·s raw alert rows.
+    * never performed. Default None = exact, zero extra cost (no per-cell
+    * statistics run) — the production response to a tripped cap is
+    * per-cell pre-aggregation (`goldDenseSummary`) rather than f·s raw
+    * alert rows.
+    *
+    * This is the pair set of `cellGrid` without its `cell` column.
     */
   def goldAlertsGrid(fires: DataFrame, weather: DataFrame,
-      maxPairsPerCell: Option[Long] = None): DataFrame = {
-    require(maxPairsPerCell.forall(_ > 0), "maxPairsPerCell must be positive")
-    val lw0 = latestWeather(weather)
-      .withColumn("cell", gridCell(col("station_lat"), col("station_lon"), radiusDeg))
-    val fx0 = fires.withColumn("cell",
-      explode(gridCellNeighbors(col("lat"), col("lon"), radiusDeg)))
-    val (fx, lw) = maxPairsPerCell match {
-      case None => (fx0, lw0)
-      case Some(cap) =>
-        val dense = fx0.groupBy("cell").agg(count(lit(1)).as("__nf"))
-          .join(lw0.groupBy("cell").agg(count(lit(1)).as("__ns")), "cell")
-          .filter(col("__nf") * col("__ns") > cap)
-          .select("cell")
-        (fx0.join(broadcast(dense), Seq("cell"), "left_anti"),
-         lw0.join(broadcast(dense), Seq("cell"), "left_anti"))
-    }
-    val dist = euclideanDeg(col("lat"), col("lon"),
-      col("station_lat"), col("station_lon"))
-    // NOTE: column-first-then-filter does NOT deduplicate the distance
-    // computation — Catalyst's PushPredicateThroughNonJoin substitutes
-    // the alias back and pushes the predicate below the Project, so the
-    // optimized plan evaluates the sqrt/pow tree in the join filter AND
-    // the projection, identically to filter-then-withColumn (verified on
-    // the executed plan). The form is kept for readability only; forcing
-    // a single evaluation would need a pipeline barrier, which costs more
-    // than the arithmetic it saves.
-    fx.join(lw, Seq("cell"))
-      .withColumn("distance_deg", dist)
-      .filter(col("distance_deg") < radiusDeg)
-      .withColumn("risk_level", RiskPolicy.riskLevel(
-        col("confidence"), col("wind_speed"), col("temperature"), col("humidity")))
-      .select(
-        col("timestamp"), col("lat").as("fire_lat"), col("lon").as("fire_lon"),
-        col("weather_station"), col("wind_speed"), col("temperature"),
-        col("humidity"), col("risk_level"), col("distance_deg"))
-  }
+      maxPairsPerCell: Option[Long] = None): DataFrame =
+    cellGrid(fires, weather, maxPairsPerCell).pairs.drop("cell")
 
   /** Per-cell alert summary with the DENSE-CELL PRE-AGGREGATE — the
     * production serve for cells `goldAlertsGrid`'s cap culls. A dense cell
@@ -144,24 +112,44 @@ object GoldJob {
     * Dense rows are therefore an UPPER-BOUND CERTIFICATE — stations/risk
     * may exceed the per-pair truth — and `is_dense` lets consumers tell
     * the regimes apart. The oracle mirrors the same certificate semantics.
-    * Sparse cells carry the same schema computed from their EXACT alerts
-    * (the grid join runs only on them), so one union serves both regimes:
-    * per-pair truth where it's affordable, a per-cell certificate where it
-    * isn't. Plan shape: two per-cell aggregations, the count-bounded dense
-    * list broadcast, one grid equi join over the sparse remainder — no
-    * quadratic work anywhere, which is what makes the flagship's sf1
-    * output-quadratic slope disappear from the serve path.
+    * Sparse cells carry the same schema computed from their EXACT alerts,
+    * so one union serves both regimes: per-pair truth where it's
+    * affordable, a per-cell certificate where it isn't.
+    *
+    * Built from `cellGrid`'s two frames: the dense rows of its per-cell
+    * statistics, plus the per-cell aggregate of its pair set (which holds
+    * sparse cells only) joined back to those statistics for the side
+    * counts. No quadratic work anywhere, which is what makes the
+    * flagship's sf1 output-quadratic slope disappear from the serve path.
     */
   def goldDenseSummary(fires: DataFrame, weather: DataFrame,
-      maxPairsPerCell: Long): DataFrame = {
-    require(maxPairsPerCell > 0, "maxPairsPerCell must be positive")
+      maxPairsPerCell: Long): DataFrame =
+    cellSummary(cellGrid(fires, weather, Some(maxPairsPerCell)))
+
+  /** The two frames both gold tables derive from.
+    *
+    *   - `stats`: one row per cell holding a fire probe AND a station —
+    *     `n_fire_probes` (exploded 3×3 probes landing in the cell),
+    *     `n_stations`, `__has_h` (1 when a probing fire has confidence
+    *     'h'), `__best_h_rank` (the best station's risk rank under an 'h'
+    *     fire) and `__dense` (probe × station product over the cap; never
+    *     true without a cap). Narrow per-side aggregates, linear in each
+    *     side.
+    *   - `pairs`: every fire × station alert within `radiusDeg`, through
+    *     the 3×3 grid equi join, classified, with the `cell` it lives in
+    *     (the station's). Under a cap, dense cells are anti-joined away on
+    *     both sides before the join, so their quadratic pairs are never
+    *     formed; without one, `stats` is not part of its plan.
+    */
+  private[gold] final case class CellGrid(stats: DataFrame, pairs: DataFrame)
+
+  private[gold] def cellGrid(fires: DataFrame, weather: DataFrame,
+      maxPairsPerCell: Option[Long]): CellGrid = {
+    require(maxPairsPerCell.forall(_ > 0), "maxPairsPerCell must be positive")
     val lw0 = latestWeather(weather)
       .withColumn("cell", gridCell(col("station_lat"), col("station_lon"), radiusDeg))
     val fx0 = fires.withColumn("cell",
       explode(gridCellNeighbors(col("lat"), col("lon"), radiusDeg)))
-    val levelOfRank = (r: org.apache.spark.sql.Column) =>
-      when(r === 0, "EXTREME").when(r === 1, "VERY_HIGH")
-        .when(r === 2, "HIGH").when(r === 3, "MODERATE").otherwise("LOW")
     val nf = fx0.groupBy("cell").agg(
       count(lit(1)).as("n_fire_probes"),
       max(when(col("confidence") === "h", 1).otherwise(0)).as("__has_h"))
@@ -171,31 +159,55 @@ object GoldJob {
       min(RiskPolicy.riskRank(RiskPolicy.riskLevel(lit("h"),
         col("wind_speed"), col("temperature"), col("humidity"))))
         .as("__best_h_rank"))
-    val cellStats = nf.join(ns, Seq("cell"))
-    val dense = cellStats
-      .filter(col("n_fire_probes") * col("n_stations") > maxPairsPerCell)
-    val denseSum = dense.select(
+    val stats = nf.join(ns, Seq("cell")).withColumn("__dense",
+      maxPairsPerCell.fold(lit(false))(cap =>
+        col("n_fire_probes") * col("n_stations") > cap))
+    val (fx, lw) =
+      if (maxPairsPerCell.isEmpty) (fx0, lw0)
+      else {
+        val dense = stats.filter(col("__dense")).select("cell")
+        (fx0.join(broadcast(dense), Seq("cell"), "left_anti"),
+         lw0.join(broadcast(dense), Seq("cell"), "left_anti"))
+      }
+    val dist = euclideanDeg(col("lat"), col("lon"),
+      col("station_lat"), col("station_lon"))
+    // NOTE: column-first-then-filter does NOT deduplicate the distance
+    // computation — Catalyst's PushPredicateThroughNonJoin substitutes
+    // the alias back and pushes the predicate below the Project, so the
+    // optimized plan evaluates the sqrt/pow tree in the join filter AND
+    // the projection, identically to filter-then-withColumn (verified on
+    // the executed plan). The form is kept for readability only; forcing
+    // a single evaluation would need a pipeline barrier, which costs more
+    // than the arithmetic it saves.
+    val pairs = fx.join(lw, Seq("cell"))
+      .withColumn("distance_deg", dist)
+      .filter(col("distance_deg") < radiusDeg)
+      .withColumn("risk_level", RiskPolicy.riskLevel(
+        col("confidence"), col("wind_speed"), col("temperature"), col("humidity")))
+      .select(
+        col("cell"),
+        col("timestamp"), col("lat").as("fire_lat"), col("lon").as("fire_lon"),
+        col("weather_station"), col("wind_speed"), col("temperature"),
+        col("humidity"), col("risk_level"), col("distance_deg"))
+    CellGrid(stats, pairs)
+  }
+
+  /** `goldDenseSummary` over one `cellGrid`: dense rows from the stats,
+    * sparse rows from the pair set's per-cell aggregate. */
+  private def cellSummary(grid: CellGrid): DataFrame = {
+    val levelOfRank = (r: org.apache.spark.sql.Column) =>
+      when(r === 0, "EXTREME").when(r === 1, "VERY_HIGH")
+        .when(r === 2, "HIGH").when(r === 3, "MODERATE").otherwise("LOW")
+    val denseSum = grid.stats.filter(col("__dense")).select(
       col("cell"), lit(1).as("is_dense"),
       col("n_fire_probes"), col("n_stations"),
       col("n_stations").as("n_alerting_stations"),
       levelOfRank(when(col("__has_h") === 1, col("__best_h_rank"))
         .otherwise(4)).as("max_risk"))
-    val denseCells = dense.select("cell")
-    val dist = euclideanDeg(col("lat"), col("lon"),
-      col("station_lat"), col("station_lon"))
-    val sparseAlerts = fx0
-      .join(broadcast(denseCells), Seq("cell"), "left_anti")
-      .join(lw0.join(broadcast(denseCells), Seq("cell"), "left_anti"),
-        Seq("cell"))
-      .filter(dist < radiusDeg)
-      .select(col("cell"), col("weather_station"),
-        RiskPolicy.riskRank(RiskPolicy.riskLevel(col("confidence"),
-          col("wind_speed"), col("temperature"), col("humidity")))
-          .as("__rank"))
-    val sparseSum = sparseAlerts.groupBy("cell")
+    val sparseSum = grid.pairs.groupBy("cell")
       .agg(count_distinct(col("weather_station")).as("n_alerting_stations"),
-           min(col("__rank")).as("__best_rank"))
-      .join(cellStats.select("cell", "n_fire_probes", "n_stations"),
+           min(RiskPolicy.riskRank(col("risk_level"))).as("__best_rank"))
+      .join(grid.stats.select("cell", "n_fire_probes", "n_stations"),
         Seq("cell"))
       .select(col("cell"), lit(0).as("is_dense"),
         col("n_fire_probes"), col("n_stations"),
@@ -229,6 +241,16 @@ object GoldJob {
     * `gold_alerts` semantics, not the production default, because its
     * output is quadratic in per-cell density by definition.
     *
+    * One derivation per cycle: the per-cell statistics and the grid pair
+    * set of `cellGrid` are cached once, and everything the cycle emits
+    * comes from those two frames — `fire_risk_alerts` is the pair set's
+    * projection (`goldAlertsGrid`), `fire_risk_alert_cells` its
+    * `goldDenseSummary`, and the culled-cell count a filter of the cached
+    * statistics. Each table is committed by `overwriteIfNonEmpty`
+    * (write-then-publish, no separate emptiness pass). The caches are
+    * released in `finally`: the cycle repeats for the life of one JVM, so
+    * its blocks must not wait for garbage collection.
+    *
     * THE CULL IS SURFACED, NEVER SILENT: a consumer reading only
     * `fire_risk_alerts` sees NO rows for a culled dense cell, so every
     * capped cycle (a) writes the certificate row for each culled cell
@@ -247,30 +269,34 @@ object GoldJob {
     val weather = catalog.read("silver", "weather_events")
     // grid equi join, not the broadcast BNLJ: identical result set
     // (GoldJobSpec pins equivalence) with no broadcast-size precondition.
-    val wrote = catalog.overwriteIfNonEmpty(
-      goldAlertsGrid(fires, weather, maxPairsPerCell),
-      "gold", "fire_risk_alerts")
-    // the cells summary refreshes on EVERY cycle, exact included: an
-    // exact cycle after a capped one would otherwise leave the previous
-    // corpus's is_dense certificates beside a pair table that now holds
-    // those cells' full pair sets — two gold tables disagreeing about
-    // which cells were culled. In exact mode the cap is ∞, so no cell is
-    // marked dense and consumers are told to trust the pair table alone.
-    val wroteCells = catalog.overwriteIfNonEmpty(
-      goldDenseSummary(fires, weather,
-        maxPairsPerCell.getOrElse(Long.MaxValue)),
-      "gold", "fire_risk_alert_cells")
-    // surface the cull: count certificate rows from the tiny summary just
-    // written (per-cell cardinality — metadata-cheap) and say it out loud
-    if (maxPairsPerCell.isDefined && wroteCells) {
-      val culled = catalog.read("gold", "fire_risk_alert_cells")
-        .filter(col("is_dense") === 1).count()
-      if (culled > 0) log.warn(
-        s"gold cycle culled $culled dense cell(s) from fire_risk_alerts " +
-          s"(cap=${maxPairsPerCell.get} pairs/cell); their alerts are " +
-          "served as certificates in fire_risk_alert_cells (is_dense=1)")
+    // Stats first: the pair set's dense anti join then reads its cache.
+    val grid = cellGrid(fires, weather, maxPairsPerCell)
+    grid.stats.cache()
+    grid.pairs.cache()
+    try {
+      val wrote = catalog.overwriteIfNonEmpty(grid.pairs.drop("cell"),
+        "gold", "fire_risk_alerts")
+      // the cells summary refreshes on EVERY cycle, exact included: an
+      // exact cycle after a capped one would otherwise leave the previous
+      // corpus's is_dense certificates beside a pair table that now holds
+      // those cells' full pair sets — two gold tables disagreeing about
+      // which cells were culled. In exact mode the cap is ∞, so no cell is
+      // marked dense and consumers are told to trust the pair table alone.
+      catalog.overwriteIfNonEmpty(cellSummary(grid),
+        "gold", "fire_risk_alert_cells")
+      // surface the cull and say it out loud
+      if (maxPairsPerCell.isDefined) {
+        val culled = grid.stats.filter(col("__dense")).count()
+        if (culled > 0) log.warn(
+          s"gold cycle culled $culled dense cell(s) from fire_risk_alerts " +
+            s"(cap=${maxPairsPerCell.get} pairs/cell); their alerts are " +
+            "served as certificates in fire_risk_alert_cells (is_dense=1)")
+      }
+      wrote
+    } finally {
+      grid.pairs.unpersist()
+      grid.stats.unpersist()
     }
-    wrote
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)

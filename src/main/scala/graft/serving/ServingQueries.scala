@@ -1,6 +1,7 @@
 package graft.serving
 
 import graft.functions.RiskPolicy
+import graft.plans.PlanBarriers
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -15,8 +16,17 @@ object ServingQueries {
   /** Synthetic fire key + best (most severe, nearest) alert per fire —
     * pandas sort+drop_duplicates (reference: app.py:61-67) as the window
     * dedup idiom (W2).
+    *
+    * Returned behind `PlanBarriers.lazyPin` (sized by `gold`): a dashboard
+    * read derives the fire list, `kpis` and `topWind` from this one frame,
+    * as the reference derives them from one pandas frame, so the window
+    * runs once per read and its consumers scan the pinned rows.
     */
-  def uniqueFires(gold: DataFrame): DataFrame = {
+  def uniqueFires(gold: DataFrame): DataFrame =
+    PlanBarriers.lazyPin(uniqueFiresWindow(gold), sizedBy = gold)
+
+  /** The unpinned window dedup behind `uniqueFires`. */
+  private[graft] def uniqueFiresWindow(gold: DataFrame): DataFrame = {
     val keyed = gold
       .withColumn("fire_id", concat_ws("_", col("fire_lat"), col("fire_lon")))
       .withColumn("risk_rank", RiskPolicy.riskRank(col("risk_level")))

@@ -1,9 +1,14 @@
 package graft
 
+import graft.catalog.TableCatalog
 import graft.gold.GoldJob
 import graft.model.Fixtures
 import graft.serving.ServingQueries
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** Golden-result test of the full Gold pipeline on the reference's own mock
@@ -12,6 +17,16 @@ import org.apache.spark.sql.functions._
   */
 class GoldJobSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Spark jobs one capped `runCycle` submitted on the two-regime fixture
+    * when each gold table derived its own grid pairs and cell statistics,
+    * each write was gated by a cached `isEmpty` pass, and the culled count
+    * re-read the cells table. */
+  private val PerTableJobs = 30
+
+  /** The same count with the cell statistics and the pair set derived once
+    * and cached, and each table written then published. */
+  private val SharedFrameJobs = 20
 
   private def fires = Fixtures.mockFires.toDS().toDF()
   private def weather = Fixtures.mockWeather.toDS().toDF()
@@ -48,19 +63,36 @@ class GoldJobSpec extends SparkSpec {
       canon(GoldJob.goldAlerts(fires, weather)))
   }
 
+  // Two-regime fixture: cell (0,0) holds 2 fires × 2 stations = 4
+  // pair-cost, the (50.x, 120.x) cell 1 × 1 — so cap 3 makes the origin
+  // cell dense and leaves the far cell sparse.
+  private def twoRegimeFires = Seq((1L, 0.3, 0.3, "h"), (2L, 0.4, 0.4, "h"),
+      (3L, 50.2, 120.2, "h"))
+    .toDF("timestamp", "lat", "lon", "confidence")
+  private def twoRegimeWeather = Seq(
+      (101L, 1L, 0.1, 0.1, 10.0, 50.0, 20.0),
+      (102L, 1L, 0.2, 0.2, 10.0, 50.0, 20.0),
+      (103L, 1L, 50.1, 120.1, 10.0, 50.0, 20.0))
+    .toDF("location_id", "timestamp", "lat", "lon", "wind_speed",
+      "humidity", "temperature")
+
+  private def twoRegimeCatalog(prefix: String): TableCatalog = {
+    val cat = new TableCatalog(spark, tmpDir(prefix))
+    cat.overwrite(twoRegimeFires, "silver", "fire_events")
+    cat.overwrite(twoRegimeWeather, "silver", "weather_events")
+    cat
+  }
+
+  /** Rows in a canonical order, for order-free equality. */
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.mkString("|"))
+
   test("maxPairsPerCell skips dense cells, keeps sparse cells exact") {
     // cell (0,0): 2 fires × 2 stations = 4 pair-cost; far cell: 1 × 1.
     // cap 3 → the dense cell's alerts vanish, the sparse cell's survive
     // untouched; cap ≥ 4 (and the None default) → exact everywhere.
-    val f = Seq((1L, 0.3, 0.3, "h"), (2L, 0.4, 0.4, "h"),
-        (3L, 50.2, 120.2, "h"))
-      .toDF("timestamp", "lat", "lon", "confidence")
-    val w = Seq(
-        (101L, 1L, 0.1, 0.1, 10.0, 50.0, 20.0),
-        (102L, 1L, 0.2, 0.2, 10.0, 50.0, 20.0),
-        (103L, 1L, 50.1, 120.1, 10.0, 50.0, 20.0))
-      .toDF("location_id", "timestamp", "lat", "lon", "wind_speed",
-        "humidity", "temperature")
+    val f = twoRegimeFires
+    val w = twoRegimeWeather
     assert(GoldJob.goldAlertsGrid(f, w).count() === 5)
     assert(GoldJob.goldAlertsGrid(f, w, maxPairsPerCell = Some(100L)).count() === 5)
     val capped = GoldJob.goldAlertsGrid(f, w, maxPairsPerCell = Some(3L))
@@ -70,24 +102,25 @@ class GoldJobSpec extends SparkSpec {
 
   test("runCycle default is density-capped: bounded pair output plus the " +
       "certificate table; exact form stays explicit") {
-    import graft.catalog.TableCatalog
-    val cat = new TableCatalog(spark, tmpDir("gold-cycle"))
     // same fixture as the cap test above: origin cell dense under cap=3,
     // the (50.x, 120.x) cell sparse
-    val f = Seq((1L, 0.3, 0.3, "h"), (2L, 0.4, 0.4, "h"),
-        (3L, 50.2, 120.2, "h"))
-      .toDF("timestamp", "lat", "lon", "confidence")
-    val w = Seq(
-        (101L, 1L, 0.1, 0.1, 10.0, 50.0, 20.0),
-        (102L, 1L, 0.2, 0.2, 10.0, 50.0, 20.0),
-        (103L, 1L, 50.1, 120.1, 10.0, 50.0, 20.0))
-      .toDF("location_id", "timestamp", "lat", "lon", "wind_speed",
-        "humidity", "temperature")
-    cat.overwrite(f, "silver", "fire_events")
-    cat.overwrite(w, "silver", "weather_events")
+    val cat = twoRegimeCatalog("gold-cycle")
+    // each cycle's two tables equal the public functions computed directly
+    // from the same silver — the cycle's shared derivation must not drift
+    // from `goldAlertsGrid` / `goldDenseSummary`
+    def matchesDirect(cap: Option[Long]): Unit = {
+      val f = cat.read("silver", "fire_events")
+      val w = cat.read("silver", "weather_events")
+      assert(rowsOf(cat.read("gold", "fire_risk_alerts")) ===
+        rowsOf(GoldJob.goldAlertsGrid(f, w, cap)), s"alerts, cap=$cap")
+      assert(rowsOf(cat.read("gold", "fire_risk_alert_cells")) ===
+        rowsOf(GoldJob.goldDenseSummary(f, w, cap.getOrElse(Long.MaxValue))),
+        s"cells, cap=$cap")
+    }
     // capped cycle: the dense origin cell is CULLED from pair emission
     // (bounded output) and served through the certificate table instead
     assert(GoldJob.runCycle(cat, Some(3L)))
+    matchesDirect(Some(3L))
     val alerts = cat.read("gold", "fire_risk_alerts")
     assert(alerts.select($"fire_lat", $"weather_station")
       .as[(Double, Long)].collect().toSet === Set((50.2, 103L)))
@@ -99,6 +132,7 @@ class GoldJobSpec extends SparkSpec {
     // DEFAULT cycle: cap present (1M — nothing dense at this scale), both
     // tables written, full exact pair set at this density
     assert(GoldJob.runCycle(cat))
+    matchesDirect(Some(GoldJob.defaultMaxPairsPerCell))
     assert(cat.read("gold", "fire_risk_alerts").count() === 5)
     assert(cat.read("gold", "fire_risk_alert_cells")
       .filter($"is_dense" === 1).count() === 0)
@@ -106,10 +140,56 @@ class GoldJobSpec extends SparkSpec {
     // it REFRESHES the cells summary (cap=∞ → nothing dense) so the two
     // gold tables can never disagree about which cells were culled
     assert(GoldJob.runCycleExact(cat))
+    matchesDirect(None)
     assert(cat.read("gold", "fire_risk_alerts").count() === 5)
     assert(cat.read("gold", "fire_risk_alert_cells")
       .filter($"is_dense" === 1).count() === 0,
       "exact cycle left a stale dense certificate behind")
+  }
+
+  test("a capped runCycle derives each shared frame once: fewer Spark jobs " +
+      "than the per-table derivation") {
+    val cat = twoRegimeCatalog("gold-jobs")
+    val sc = spark.sparkContext
+    val group = "gold-cycle-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "capped gold cycle")
+      try assert(GoldJob.runCycle(cat, Some(3L)))
+      finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() > 0)
+    assert(jobs.get() < PerTableJobs, s"${jobs.get()} jobs")
+    // and no more than with both frames pinned: dropping the two caches
+    // alone gives 29, which the bound above would still admit
+    assert(jobs.get() <= SharedFrameJobs, s"${jobs.get()} jobs")
+  }
+
+  test("pinned uniqueFires: kpis and topWind see the window's rows and " +
+      "never re-run it") {
+    val gold = GoldJob.goldAlerts(fires, weather)
+    val uf = ServingQueries.uniqueFires(gold)
+    val window = ServingQueries.uniqueFiresWindow(gold)
+    assert(rowsOf(uf) === rowsOf(window))
+    assert(rowsOf(ServingQueries.kpis(uf)) ===
+      rowsOf(ServingQueries.kpis(window)))
+    assert(ServingQueries.topWind(uf).collect().toSeq ===
+      ServingQueries.topWind(window).collect().toSeq)
+    object Plans extends AdaptiveSparkPlanHelper
+    def windowNodes(df: DataFrame) = {
+      df.collect()
+      Plans.collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
+    }
+    assert(windowNodes(ServingQueries.kpis(uf)).isEmpty)
+    assert(windowNodes(ServingQueries.kpis(window)).nonEmpty)
   }
 
   test("serving queries over gold") {

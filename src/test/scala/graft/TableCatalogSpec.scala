@@ -133,6 +133,51 @@ class TableCatalogSpec extends SparkSpec {
     assert(cat.read("gold", "g").count() === 1) // old snapshot intact
   }
 
+  /** Write-then-publish contract of `overwriteIfNonEmpty` on one catalog:
+    * an empty snapshot — plain or `partitionBy` — is deleted unpublished
+    * and leaves the pointer, `versions()` and the `_v/` listing as they
+    * were; a non-empty one publishes the next version. */
+  private def writeThenPublish(cat: TableCatalog): Unit = {
+    val df = Seq((1, "a"), (2, "b")).toDF("x", "s")
+    val none = df.filter($"x" > 100)
+    def vListing = Option(new java.io.File(cat.path("gold", "g"), "_v").list())
+      .map(_.toSeq.sorted)
+    def state = (cat.currentVersion("gold", "g"), cat.versions("gold", "g"),
+      vListing)
+    def xs = cat.read("gold", "g").select($"x".cast("int")).as[Int]
+      .collect().sorted.toSeq
+    // a table the empty write would create is not created
+    assert(!cat.overwriteIfNonEmpty(none, "gold", "g"))
+    assert(!cat.exists("gold", "g"))
+    assert(cat.overwriteIfNonEmpty(df, "gold", "g"))
+    assert(cat.overwriteIfNonEmpty(df.filter($"x" === 2), "gold", "g"))
+    val before = state
+    assert(before === ((Some(2), Seq(1, 2), Some(Seq("00001", "00002")))))
+    assert(!cat.overwriteIfNonEmpty(none, "gold", "g"))
+    assert(state === before, "empty write left a trace")
+    assert(!cat.overwriteIfNonEmpty(none, "gold", "g", partitionBy = Seq("s")))
+    assert(state === before, "empty partitioned write left a trace")
+    assert(xs === Seq(2))
+    // the next non-empty write takes the next version number and the
+    // retention vacuum (keepVersions = 2) runs as for `overwrite`
+    assert(cat.overwriteIfNonEmpty(df, "gold", "g", partitionBy = Seq("s")))
+    assert(state === ((Some(3), Seq(2, 3), Some(Seq("00002", "00003")))))
+    assert(xs === Seq(1, 2))
+  }
+
+  test("overwriteIfNonEmpty is write-then-publish: an empty snapshot is " +
+      "never published and leaves no version dir") {
+    writeThenPublish(new TableCatalog(spark, tmpDir("cat-wtp")))
+  }
+
+  test("overwriteIfNonEmpty on a json catalog: the read-back emptiness " +
+      "test gives the parquet results") {
+    // a parquet footer read of a json file would throw, so passing means
+    // the non-parquet path decided every publish
+    writeThenPublish(new TableCatalog(spark, tmpDir("cat-wtp-json"),
+      format = "json"))
+  }
+
   test("partitionBy produces hive layout and partition pruning prunes") {
     val cat = new TableCatalog(spark, tmpDir("cat"))
     val df = Seq(("canarias", 1), ("peninsula", 2), ("peninsula", 3))
