@@ -77,12 +77,15 @@ object GoldJob {
     * exploded 3×3 probes landing in the cell) exceeds it are SKIPPED —
     * stations in a skipped cell emit no alerts (each pair lives in exactly
     * ONE cell, the station's, so surviving cells stay exact). The decision
-    * is made BEFORE the join from two narrow per-cell counts and the dense
-    * list is count-bounded → broadcast anti join; the quadratic work is
-    * never performed. Default None = exact, zero extra cost (no per-cell
-    * statistics run) — the production response to a tripped cap is
-    * per-cell pre-aggregation (`goldDenseSummary`) rather than f·s raw
-    * alert rows.
+    * is made BEFORE the join, on the driver, from the per-cell statistics
+    * `cellGrid` collects (one row per cell holding a station and a fire
+    * probe, at most `MaxStatsCells`); the quadratic work is never
+    * performed. When no cell is dense — the usual case under the 1M
+    * default — the plan is the plain cell equi join; otherwise both sides
+    * are filtered by `NOT cell IN (dense cells)`. Default None = exact,
+    * zero extra cost (no per-cell statistics run) — the production
+    * response to a tripped cap is per-cell pre-aggregation
+    * (`goldDenseSummary`) rather than f·s raw alert rows.
     *
     * This is the pair set of `cellGrid` without its `cell` column.
     */
@@ -116,17 +119,28 @@ object GoldJob {
     * so one union serves both regimes: per-pair truth where it's
     * affordable, a per-cell certificate where it isn't.
     *
-    * Built from `cellGrid`'s two frames: the dense rows of its per-cell
-    * statistics, plus the per-cell aggregate of its pair set (which holds
-    * sparse cells only) joined back to those statistics for the side
-    * counts. No quadratic work anywhere, which is what makes the
-    * flagship's sf1 output-quadratic slope disappear from the serve path.
+    * Built from one `cellGrid`: the dense rows of its collected per-cell
+    * statistics (a local relation, so they need no Spark job), plus the
+    * per-cell aggregate of its pair set (which holds sparse cells only)
+    * joined back to those statistics for the side counts. No quadratic
+    * work anywhere, which is what makes the flagship's sf1
+    * output-quadratic slope disappear from the serve path. Like every
+    * capped `cellGrid`, it fails when more than `MaxStatsCells` cells hold
+    * a station and a fire probe (out-of-range coordinates).
     */
   def goldDenseSummary(fires: DataFrame, weather: DataFrame,
       maxPairsPerCell: Long): DataFrame =
     cellSummary(cellGrid(fires, weather, Some(maxPairsPerCell)))
 
-  /** The two frames both gold tables derive from.
+  /** Row budget of a capped `cellGrid`'s per-cell statistics collect. A
+    * statistics row is a cell holding a station, and the 20° grid over
+    * valid coordinates has 10 × 19 = 190 of them, so only out-of-range
+    * coordinates can exceed the budget; 4 096 rows of five narrow columns
+    * stay under 1 MB on the driver.
+    */
+  private[graft] val MaxStatsCells = 4096
+
+  /** What both gold tables derive from.
     *
     *   - `stats`: one row per cell holding a fire probe AND a station —
     *     `n_fire_probes` (exploded 3×3 probes landing in the cell),
@@ -134,15 +148,26 @@ object GoldJob {
     *     'h'), `__best_h_rank` (the best station's risk rank under an 'h'
     *     fire) and `__dense` (probe × station product over the cap; never
     *     true without a cap). Narrow per-side aggregates, linear in each
-    *     side.
+    *     side. Under a cap it is a local relation of the collected rows;
+    *     without one it is the unevaluated distributed frame.
+    *   - `dense`: the cells over the cap, decided on the driver from the
+    *     collected rows; empty without a cap.
     *   - `pairs`: every fire × station alert within `radiusDeg`, through
     *     the 3×3 grid equi join, classified, with the `cell` it lives in
-    *     (the station's). Under a cap, dense cells are anti-joined away on
-    *     both sides before the join, so their quadratic pairs are never
-    *     formed; without one, `stats` is not part of its plan.
+    *     (the station's). Dense cells are filtered out of both sides
+    *     before the join, so their quadratic pairs are never formed; with
+    *     no dense cell the plan is the plain equi join, and `stats` is not
+    *     part of it in either case.
     */
-  private[gold] final case class CellGrid(stats: DataFrame, pairs: DataFrame)
+  private[gold] final case class CellGrid(stats: DataFrame, dense: Seq[String],
+      pairs: DataFrame)
 
+  /** Builds the `CellGrid`. Under a cap this runs one Spark job: the
+    * per-cell statistics come to the driver in a collect bounded by
+    * `MaxStatsCells`, and more rows than that fail the call before any
+    * pair is formed or any table written. No distributed fallback: a
+    * cell key of a valid coordinate cannot produce that many rows.
+    */
   private[gold] def cellGrid(fires: DataFrame, weather: DataFrame,
       maxPairsPerCell: Option[Long]): CellGrid = {
     require(maxPairsPerCell.forall(_ > 0), "maxPairsPerCell must be positive")
@@ -159,15 +184,28 @@ object GoldJob {
       min(RiskPolicy.riskRank(RiskPolicy.riskLevel(lit("h"),
         col("wind_speed"), col("temperature"), col("humidity"))))
         .as("__best_h_rank"))
-    val stats = nf.join(ns, Seq("cell")).withColumn("__dense",
+    val statsFrame = nf.join(ns, Seq("cell")).withColumn("__dense",
       maxPairsPerCell.fold(lit(false))(cap =>
         col("n_fire_probes") * col("n_stations") > cap))
+    val (stats, dense) = maxPairsPerCell match {
+      case None => (statsFrame, Seq.empty[String])
+      case Some(cap) =>
+        val rows = statsFrame.limit(MaxStatsCells + 1).collect()
+        if (rows.length > MaxStatsCells) throw new IllegalStateException(
+          s"gold cell statistics: more than $MaxStatsCells grid cells hold " +
+            "a station and a fire probe, but the grid over valid " +
+            "coordinates has 190: the input holds out-of-range coordinates " +
+            s"(density cap $cap not applied)")
+        (statsFrame.sparkSession.createDataFrame(
+            java.util.Arrays.asList(rows: _*), statsFrame.schema),
+         rows.toSeq.filter(_.getAs[Boolean]("__dense"))
+           .map(_.getAs[String]("cell")))
+    }
     val (fx, lw) =
-      if (maxPairsPerCell.isEmpty) (fx0, lw0)
+      if (dense.isEmpty) (fx0, lw0)
       else {
-        val dense = stats.filter(col("__dense")).select("cell")
-        (fx0.join(broadcast(dense), Seq("cell"), "left_anti"),
-         lw0.join(broadcast(dense), Seq("cell"), "left_anti"))
+        val sparse = !col("cell").isin(dense: _*)
+        (fx0.filter(sparse), lw0.filter(sparse))
       }
     val dist = euclideanDeg(col("lat"), col("lon"),
       col("station_lat"), col("station_lon"))
@@ -189,7 +227,7 @@ object GoldJob {
         col("timestamp"), col("lat").as("fire_lat"), col("lon").as("fire_lon"),
         col("weather_station"), col("wind_speed"), col("temperature"),
         col("humidity"), col("risk_level"), col("distance_deg"))
-    CellGrid(stats, pairs)
+    CellGrid(stats, dense, pairs)
   }
 
   /** `goldDenseSummary` over one `cellGrid`: dense rows from the stats,
@@ -241,15 +279,19 @@ object GoldJob {
     * `gold_alerts` semantics, not the production default, because its
     * output is quadratic in per-cell density by definition.
     *
-    * One derivation per cycle: the per-cell statistics and the grid pair
-    * set of `cellGrid` are cached once, and everything the cycle emits
-    * comes from those two frames — `fire_risk_alerts` is the pair set's
+    * One derivation per cycle: everything the cycle emits comes from one
+    * `cellGrid`. Under the cap its per-cell statistics are collected to
+    * the driver once (bounded by `MaxStatsCells`; out-of-range silver
+    * fails the cycle here, before either table is written) and the dense
+    * cells are decided there, so `fire_risk_alerts` is the pair set's
     * projection (`goldAlertsGrid`), `fire_risk_alert_cells` its
-    * `goldDenseSummary`, and the culled-cell count a filter of the cached
-    * statistics. Each table is committed by `overwriteIfNonEmpty`
-    * (write-then-publish, no separate emptiness pass). The caches are
-    * released in `finally`: the cycle repeats for the life of one JVM, so
-    * its blocks must not wait for garbage collection.
+    * `goldDenseSummary` over the collected statistics, and the culled-cell
+    * count the size of the dense list — neither needs a job of its own.
+    * Only the pair set is cached, because both writes read it; each table
+    * is committed by `overwriteIfNonEmpty` (write-then-publish, no
+    * separate emptiness pass). The cache is released in `finally`: the
+    * cycle repeats for the life of one JVM, so its blocks must not wait
+    * for garbage collection.
     *
     * THE CULL IS SURFACED, NEVER SILENT: a consumer reading only
     * `fire_risk_alerts` sees NO rows for a culled dense cell, so every
@@ -269,9 +311,7 @@ object GoldJob {
     val weather = catalog.read("silver", "weather_events")
     // grid equi join, not the broadcast BNLJ: identical result set
     // (GoldJobSpec pins equivalence) with no broadcast-size precondition.
-    // Stats first: the pair set's dense anti join then reads its cache.
     val grid = cellGrid(fires, weather, maxPairsPerCell)
-    grid.stats.cache()
     grid.pairs.cache()
     try {
       val wrote = catalog.overwriteIfNonEmpty(grid.pairs.drop("cell"),
@@ -285,18 +325,13 @@ object GoldJob {
       catalog.overwriteIfNonEmpty(cellSummary(grid),
         "gold", "fire_risk_alert_cells")
       // surface the cull and say it out loud
-      if (maxPairsPerCell.isDefined) {
-        val culled = grid.stats.filter(col("__dense")).count()
-        if (culled > 0) log.warn(
-          s"gold cycle culled $culled dense cell(s) from fire_risk_alerts " +
-            s"(cap=${maxPairsPerCell.get} pairs/cell); their alerts are " +
-            "served as certificates in fire_risk_alert_cells (is_dense=1)")
-      }
+      if (grid.dense.nonEmpty) log.warn(
+        s"gold cycle culled ${grid.dense.size} dense cell(s) from " +
+          s"fire_risk_alerts (cap=${maxPairsPerCell.get} pairs/cell); their " +
+          "alerts are served as certificates in fire_risk_alert_cells " +
+          "(is_dense=1)")
       wrote
-    } finally {
-      grid.pairs.unpersist()
-      grid.stats.unpersist()
-    }
+    } finally grid.pairs.unpersist()
   }
 
   private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)

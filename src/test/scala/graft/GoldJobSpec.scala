@@ -28,6 +28,26 @@ class GoldJobSpec extends SparkSpec {
     * and cached, and each table written then published. */
   private val SharedFrameJobs = 20
 
+  /** The same count with the cell statistics collected once to the driver
+    * (dense cells decided there, no cached statistics frame, no anti join)
+    * and only the pair set cached. */
+  private val DriverDecidedJobs = 14
+
+  /** New generated classes allowed in a steady round of one default and
+    * one capped `runCycle` on the two-regime fixture. With the statistics
+    * frame cached and the dense list broadcast into two anti joins, three
+    * repeated rounds in one JVM compiled 0, 0 and 12, and a repeated capped
+    * cycle alone 9: the working set sat at the edge of Spark's class
+    * cache. Deciding the dense cells on the driver compiles 0. */
+  private val SteadyRoundNewClasses = 2
+
+  /** Repeated rounds the codegen test may take to reach a steady round.
+    * In the full suite a single repeated round sometimes compiled 8
+    * classes (5 distinct sources) and the next one none, so one round
+    * alone is not a stable measure; a cycle that can never reuse its
+    * classes misses in every round. */
+  private val MaxCodegenRounds = 5
+
   private def fires = Fixtures.mockFires.toDS().toDF()
   private def weather = Fixtures.mockWeather.toDS().toDF()
 
@@ -168,9 +188,82 @@ class GoldJobSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     assert(jobs.get() > 0)
     assert(jobs.get() < PerTableJobs, s"${jobs.get()} jobs")
-    // and no more than with both frames pinned: dropping the two caches
-    // alone gives 29, which the bound above would still admit
     assert(jobs.get() <= SharedFrameJobs, s"${jobs.get()} jobs")
+    // and no more than with the dense cells decided on the driver: caching
+    // the statistics frame again, or running a job for the culled count or
+    // the dense summary rows, would pass the bounds above
+    assert(jobs.get() <= DriverDecidedJobs, s"${jobs.get()} jobs")
+  }
+
+  test("no anti join in a pair plan, with or without dense cells") {
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    object Plans extends AdaptiveSparkPlanHelper
+    // runCycle's pair set is this frame plus its `cell` column. Both plans
+    // are read: AQE drops an anti join against an empty broadcast side
+    // from the executed plan, but not from the optimized one
+    def antiJoins(df: DataFrame) = {
+      df.collect()
+      df.queryExecution.optimizedPlan.collect {
+        case j: Join if j.joinType == LeftAnti => j.nodeName
+      } ++ Plans.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec if j.joinType == LeftAnti => j.nodeName
+      }
+    }
+    val f = twoRegimeFires
+    val w = twoRegimeWeather
+    assert(antiJoins(
+      GoldJob.goldAlertsGrid(f, w, Some(GoldJob.defaultMaxPairsPerCell))).isEmpty)
+    assert(antiJoins(GoldJob.goldAlertsGrid(f, w, Some(3L))).isEmpty)
+  }
+
+  test("repeated rounds of gold cycles reach a steady round that reuses " +
+      "its generated classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val cat = twoRegimeCatalog("gold-codegen")
+    def round(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      assert(GoldJob.runCycle(cat))
+      assert(GoldJob.runCycle(cat, Some(3L)))
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    round()
+    val compiled = scala.collection.mutable.ArrayBuffer(round())
+    while (compiled.last > SteadyRoundNewClasses &&
+        compiled.size < MaxCodegenRounds)
+      compiled += round()
+    assert(compiled.last <= SteadyRoundNewClasses,
+      s"new classes per repeated round: ${compiled.mkString(", ")}")
+  }
+
+  test("out-of-range coordinates past the statistics budget fail the cycle " +
+      "before either gold table is written") {
+    // one station and one fire per cell, 30° apart and all beyond lat 90°:
+    // nCells cells hold a station and a fire probe, and each fire is within
+    // the radius of its own station only
+    def catalogOf(prefix: String, nCells: Int): TableCatalog = {
+      val lats = (0 until nCells).map(i => 1000.1 + 30.0 * i)
+      val cat = new TableCatalog(spark, tmpDir(prefix))
+      cat.overwrite(lats.map(lat => (1L, lat, 0.1, "h"))
+        .toDF("timestamp", "lat", "lon", "confidence"), "silver", "fire_events")
+      cat.overwrite(lats.zipWithIndex.map { case (lat, i) =>
+          (i.toLong, 1L, lat, 0.1, 10.0, 50.0, 20.0) }
+        .toDF("location_id", "timestamp", "lat", "lon", "wind_speed",
+          "humidity", "temperature"), "silver", "weather_events")
+      cat
+    }
+    val over = catalogOf("gold-budget-over", GoldJob.MaxStatsCells + 1)
+    val e = intercept[IllegalStateException](GoldJob.runCycle(over))
+    assert(e.getMessage.contains(s"more than ${GoldJob.MaxStatsCells} grid cells"))
+    assert(e.getMessage.contains("out-of-range coordinates"))
+    assert(!over.exists("gold", "fire_risk_alerts"))
+    assert(!over.exists("gold", "fire_risk_alert_cells"))
+    // at the budget itself the cycle runs: one alert per fire
+    val at = catalogOf("gold-budget-at", GoldJob.MaxStatsCells)
+    assert(GoldJob.runCycle(at))
+    assert(at.read("gold", "fire_risk_alerts").count() === GoldJob.MaxStatsCells)
+    assert(at.read("gold", "fire_risk_alert_cells").count() === GoldJob.MaxStatsCells)
   }
 
   test("pinned uniqueFires: kpis and topWind see the window's rows and " +

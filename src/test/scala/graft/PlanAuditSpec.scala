@@ -152,6 +152,11 @@ class PlanAuditSpec extends SparkSpec {
         "edges and <=8M nodes, from counts the callers already take " +
         "(PageRank: its caller's edge-count upper bound; no hint, no " +
         "collect)"),
+    "gold/GoldJob.scala" ->
+      ("a capped cellGrid collects its per-cell statistics through " +
+        "limit(MaxStatsCells + 1): at most 4096 rows of five narrow " +
+        "columns (the grid over valid coordinates has 190 cells), and one " +
+        "row more fails the cycle"),
     "catalog/TableCatalog.scala" ->
       "collects file NAMES for the stats manifest, never table rows",
     "Bench.scala" ->
