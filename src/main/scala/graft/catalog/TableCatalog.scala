@@ -1,50 +1,15 @@
 package graft.catalog
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, SaveMode,
+  SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Layered (bronze/silver/gold) parquet table catalog — the engine's stand-in
-  * for the reference's Delta-on-MinIO storage (reference:
-  * fire_risk_processor.py:77-85, gold_batch_job.py:28-29,83-87). Delta isn't
-  * available offline; what the query surface actually needs is: layered
-  * paths, append, ACID overwrite (readers never observe a half-written
-  * table), write-skip-on-empty, schema evolution on overwrite
-  * (gold_batch_job.py:87 `overwriteSchema=true`), and partitioned layout.
-  *
-  * Overwritten tables are VERSIONED: each snapshot lands in
-  * `<table>/_v/NNNNN/`, and `<table>/_CURRENT` — a one-line pointer file —
-  * is atomically swapped to commit. This is the pointer-commit scheme that
-  * works on S3-class stores too (no directory rename), and it gives real
-  * reader isolation: an in-flight reader that resolved the pointer keeps
-  * reading its version's files even after the next commit, because the
-  * previous `keepVersions` snapshots are retained (vacuumed only when they
-  * age out of the retention window). Schema evolution falls out for free —
-  * a new version is a new self-contained directory, so `overwriteSchema`
-  * is the default and old versions stay readable with their old schema
-  * (time travel via `readVersion`).
-  *
-  * Single-writer per table (the reference's gold job is a single loop);
-  * concurrent READERS are the isolation target.
-  *
-  * Retention / read-duration contract, precisely: a reader that resolved
-  * `_CURRENT` at version N keeps a valid snapshot while at most
-  * `keepVersions - 1` further commits land; the `keepVersions`-th commit
-  * vacuums N. So size `keepVersions` ≥ ceil(longest plausible read
-  * duration / shortest commit interval) + 1 — e.g. the reference's
-  * 60-second gold cadence with dashboard reads up to 3 min in flight
-  * needs keepVersions ≥ 4. TableCatalogSpec pins both sides of the
-  * boundary with a concurrent reader.
-  *
-  * Partitioning: the reference README claims time/spatial partitioning but
-  * the code never calls partitionBy (SURVEY.md §1.3) — here it's real:
-  * `write(..., partitionBy = Seq("region"))` produces hive-style dirs and
-  * Spark prunes partitions on `region = 'x'` filters, which is the
-  * difference between scanning 100 TB and scanning one region's slice.
-  */
 /** Typed conflict signal of the optimistic commit protocol
   * (`TableCatalog.overwriteOptimistic`): the base version a writer derived
   * its snapshot from is no longer the newest committed version, or the
@@ -87,8 +52,52 @@ object TableCatalog {
     commitLocks.computeIfAbsent(tablePath, _ => new Object)
 }
 
+/** Layered (bronze/silver/gold) parquet table catalog — the engine's stand-in
+  * for the reference's Delta-on-MinIO storage (reference:
+  * fire_risk_processor.py:77-85, gold_batch_job.py:28-29,83-87). Delta isn't
+  * available offline; what the query surface actually needs is: layered
+  * paths, append, ACID overwrite (readers never observe a half-written
+  * table), write-skip-on-empty, schema evolution on overwrite
+  * (gold_batch_job.py:87 `overwriteSchema=true`), and partitioned layout.
+  *
+  * Overwritten tables are VERSIONED: each snapshot lands in
+  * `<table>/_v/NNNNN/`, and `<table>/_CURRENT` — a one-line pointer file —
+  * is atomically swapped to commit. This is the pointer-commit scheme that
+  * works on S3-class stores too (no directory rename), and it gives real
+  * reader isolation: an in-flight reader that resolved the pointer keeps
+  * reading its version's files even after the next commit, because the
+  * previous `keepVersions` snapshots are retained (vacuumed only when they
+  * age out of the retention window). Schema evolution falls out for free —
+  * a new version is a new self-contained directory, so `overwriteSchema`
+  * is the default and old versions stay readable with their old schema
+  * (time travel via `readVersion`).
+  *
+  * Every read opens its snapshot through one private `scan`. Data files
+  * are the names without a `_` or `.` prefix at any level, and the schema
+  * is the one Spark wrote into the first data file's footer, so opening a
+  * table runs no Spark job — as a Delta read takes its schema from the
+  * table's log instead of inferring it.
+  *
+  * Single-writer per table (the reference's gold job is a single loop);
+  * concurrent READERS are the isolation target.
+  *
+  * Retention / read-duration contract, precisely: a reader that resolved
+  * `_CURRENT` at version N keeps a valid snapshot while at most
+  * `keepVersions - 1` further commits land; the `keepVersions`-th commit
+  * vacuums N. So size `keepVersions` ≥ ceil(longest plausible read
+  * duration / shortest commit interval) + 1 — e.g. the reference's
+  * 60-second gold cadence with dashboard reads up to 3 min in flight
+  * needs keepVersions ≥ 4. TableCatalogSpec pins both sides of the
+  * boundary with a concurrent reader.
+  *
+  * Partitioning: the reference README claims time/spatial partitioning but
+  * the code never calls partitionBy (SURVEY.md §1.3) — here it's real:
+  * `write(..., partitionBy = Seq("region"))` produces hive-style dirs and
+  * Spark prunes partitions on `region = 'x'` filters, which is the
+  * difference between scanning 100 TB and scanning one region's slice.
+  */
 final class TableCatalog(spark: SparkSession, root: String,
-    format: String = "parquet", keepVersions: Int = 2) {
+    keepVersions: Int = 2) {
 
   require(keepVersions >= 1, "must retain at least the live version")
 
@@ -206,18 +215,17 @@ final class TableCatalog(spark: SparkSession, root: String,
   /** Reclaim one version dir through a rename-aside barrier: atomically
     * move `_v/NNNNN` to `_v/.trash_<uuid>` BEFORE the recursive delete,
     * so a lock-free reader racing the reclamation only ever observes
-    * dir-present-and-complete or dir-missing — the two states `read()`'s
-    * re-resolve retry owns. A plain recursive delete removes the data
-    * files before the directory itself; a reader that resolved the
-    * pointer inside that window analyzes an existing-but-empty dir to
-    * `UNABLE_TO_INFER_SCHEMA` (caught live by the r11 cross-JVM storm,
-    * 1-in-2 full-suite runs). The dot-prefixed trash name is invisible to
-    * `versions()` (its `toInt` filter) and to Spark's listings, so a
+    * dir-present-and-complete or dir-missing. A plain recursive delete
+    * removes the data files before the directory itself, and a reader
+    * that resolved the pointer inside that window found an existing but
+    * empty dir (caught live by the r11 cross-JVM storm, 1-in-2 full-suite
+    * runs); `read()`'s re-resolve retry still owns that state, for stores
+    * without a directory rename. The dot-prefixed trash name is invisible
+    * to `versions()` (its `toInt` filter) and to Spark's listings, so a
     * crash between rename and delete orphans nothing a reader can reach;
     * `sweepTrash` (called by every locked reclamation pass) collects such
-    * orphans. Every reclamation path MUST go through here — the explicit
-    * `vacuum` verb, `publishVersion`'s retention sweep, and the OCC
-    * commit tail.
+    * orphans. Every reclamation path MUST go through here, by way of
+    * `reclaimPastRetention`.
     */
   private def reclaimVersionDir(layer: String, table: String, v: Int): Unit = {
     val dir = versionDir(layer, table, v)
@@ -302,28 +310,22 @@ final class TableCatalog(spark: SparkSession, root: String,
     * mid-execution — the documented Delta-style hazard of vacuuming
     * below reader lag; pick keepLast accordingly.
     *
-    * The retry covers every manifestation of "the resolved version was
-    * reclaimed under us": dir gone (`VacuumedVersionException` /
-    * `PATH_NOT_FOUND`) and — defense-in-depth behind the rename-aside
-    * barrier in `reclaimVersionDir` — dir present but emptied
-    * (`UNABLE_TO_INFER_SCHEMA`), the half-deleted window a plain
-    * recursive delete exposes (caught live by the r11 cross-JVM storm).
+    * The retry covers every state in which the resolved version was
+    * reclaimed under us, each reaching it as `readVersion`'s
+    * `VacuumedVersionException`: the dir gone, a data file gone before
+    * its footer was read, and — behind the rename-aside barrier in
+    * `reclaimVersionDir`, for stores without a directory rename — the dir
+    * present but emptied (caught live by the r11 cross-JVM storm).
     */
   def read(layer: String, table: String): DataFrame = {
     var attempt = 0
     while (true) {
       currentVersion(layer, table) match {
-        case None =>
-          return spark.read.format(format).load(path(layer, table))
+        case None => return scan(new Path(path(layer, table)))
         case Some(v) =>
           try return readVersion(layer, table, v)
           catch {
-            case e: Exception if attempt < 5 &&
-                (e.isInstanceOf[VacuumedVersionException] ||
-                  (e.isInstanceOf[org.apache.spark.sql.AnalysisException] &&
-                    (String.valueOf(e.getMessage).contains("PATH_NOT_FOUND") ||
-                      String.valueOf(e.getMessage)
-                        .contains("UNABLE_TO_INFER_SCHEMA")))) =>
+            case _: VacuumedVersionException if attempt < 5 =>
               attempt += 1
               Thread.sleep(10L * attempt)
           }
@@ -333,18 +335,87 @@ final class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** Time travel: any retained snapshot, with the schema it was written
-    * with (the Delta `versionAsOf` surface).
+    * with (the Delta `versionAsOf` surface). A snapshot the retention
+    * vacuum reclaimed, wholly or in part, is the typed history error, not
+    * a generic path-not-found.
     */
-  def readVersion(layer: String, table: String, version: Int): DataFrame = {
-    val dir = versionDir(layer, table, version)
-    // A versioned table whose requested snapshot dir is gone means the
-    // retention vacuum reclaimed it — surface that as the typed history
-    // error, not a generic path-not-found from the reader.
-    if (!hadoopFs(dir).exists(dir) && versions(layer, table).nonEmpty)
-      throw new VacuumedVersionException(
-        s"$layer/$table version $version is not retained (vacuumed); " +
-          s"retained versions: ${versions(layer, table).mkString(",")}")
-    spark.read.format(format).load(dir.toString)
+  def readVersion(layer: String, table: String, version: Int): DataFrame =
+    try scan(versionDir(layer, table, version))
+    catch {
+      case _: FileNotFoundException =>
+        throw new VacuumedVersionException(
+          s"$layer/$table version $version is not retained (vacuumed); " +
+            s"retained versions: ${versions(layer, table).mkString(",")}")
+    }
+
+  /** Data files of the snapshot at `dir`, depth first in name order: every
+    * name starting with `_` or `.` is skipped at every level (`_SUCCESS`,
+    * crc sidecars, `_stats`, `_spark_metadata`), as Spark's own listing
+    * skips them. Lazy, so a caller that needs one file lists one directory
+    * per level. Throws FileNotFoundException when `dir` is gone.
+    */
+  private def dataFiles(dir: Path): Iterator[Path] = {
+    val fs = hadoopFs(dir)
+    def walk(d: Path): Iterator[Path] =
+      fs.listStatus(d).sortBy(_.getPath.getName).iterator
+        .filterNot { st =>
+          val n = st.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .flatMap(st =>
+          if (st.isDirectory) walk(st.getPath) else Iterator(st.getPath))
+    walk(dir)
+  }
+
+  /** Open the footer of parquet file `f` on the driver. */
+  private def withFooter[A](f: Path)(use: ParquetFileReader => A): A = {
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(f, spark.sessionState.newHadoopConf()))
+    try use(reader) finally reader.close()
+  }
+
+  /** Footer key under which Spark's parquet writer stores the frame's
+    * schema; Spark's own schema inference reads the same key. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The one way the catalog opens a snapshot: `files` under `dir` (every
+    * data file of `dir` when empty), with `schema` when the caller states
+    * one and otherwise the schema Spark wrote into the footer of the first
+    * file in name order — read on the driver, so no Spark job runs. Hive
+    * partition columns are discovered from the paths, as an inferring read
+    * discovers them. Every catalog file is written by Spark, so a footer
+    * without the schema key is an error naming the file, not a cue to
+    * infer.
+    *
+    * A snapshot reclaimed under the call — no data file, a file gone
+    * before its footer was read, the dir gone before Spark listed it, or
+    * Spark's listing empty — throws FileNotFoundException: Spark would
+    * open an empty listing with a stated schema as an empty table.
+    */
+  private def scan(dir: Path, files: Seq[Path] = Nil,
+      schema: Option[StructType] = None): DataFrame = {
+    def gone(why: String) = new FileNotFoundException(s"$dir: $why")
+    val s = schema.getOrElse {
+      val first =
+        if (files.nonEmpty) files.minBy(_.toString)
+        else dataFiles(dir).nextOption().getOrElse(throw gone("no data file"))
+      val json = withFooter(first)(
+        _.getFileMetaData.getKeyValueMetaData.get(SparkSchemaKey))
+      if (json == null)
+        throw new IllegalStateException(s"$first has no Spark schema " +
+          s"($SparkSchemaKey) in its footer; the catalog reads only files " +
+          "Spark wrote")
+      DataType.fromJson(json).asInstanceOf[StructType]
+    }
+    val df =
+      try spark.read.schema(s).option("basePath", dir.toString)
+        .parquet((if (files.isEmpty) Seq(dir) else files).map(_.toString): _*)
+      catch {
+        case e: AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+          throw gone(e.getMessage)
+      }
+    if (df.inputFiles.isEmpty) throw gone("no data file listed")
+    df
   }
 
   /** Retained versions with their commit instants (epoch ms) — the
@@ -439,13 +510,21 @@ final class TableCatalog(spark: SparkSession, root: String,
       s"$layer/$table is snapshot-versioned (overwrite was used); " +
         "append-mode and overwrite-mode tables are distinct — " +
         "use overwrite, or a different table for the append stream")
-    val w = df.write.mode(SaveMode.Append).format(format)
+    writeParquet(df, new Path(path(layer, table)), SaveMode.Append,
+      partitionBy)
+  }
+
+  /** Write `df` as parquet files under `dir`, hive-partitioned by
+    * `partitionBy`. */
+  private def writeParquet(df: DataFrame, dir: Path, mode: SaveMode,
+      partitionBy: Seq[String] = Nil): Unit = {
+    val w = df.write.mode(mode)
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .save(path(layer, table))
+      .parquet(dir.toString)
   }
 
   /** Export a snapshot as size-bounded shards of any Spark batch format —
-    * `format = "json"` gives JSONL, the lingua franca of training-data
+    * `exportFormat = "json"` gives JSONL, the lingua franca of training-data
     * interchange. `maxRecordsPerShard` caps rows per output file
     * (`maxRecordsPerFile`), so downstream loaders see uniform shards no
     * matter how lopsided the upstream partitions were; `shards` > 0
@@ -496,9 +575,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     val next = prevCommitted.getOrElse(
       versions(layer, table).lastOption.getOrElse(0)) + 1
     val target = versionDir(layer, table, next)
-    val w = df.write.mode(SaveMode.Overwrite).format(format)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .save(target.toString)
+    writeParquet(df, target, SaveMode.Overwrite, partitionBy)
     (prevCommitted, next, target)
   }
 
@@ -546,7 +623,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     val next = prevCommitted.getOrElse(preVersions.lastOption.getOrElse(0)) + 1
     val target = versionDir(layer, table, next)
     val name = bucketedName(layer, table, next)
-    df.write.mode(SaveMode.Overwrite).format(format)
+    df.write.mode(SaveMode.Overwrite).format("parquet")
       .bucketBy(buckets, key)
       .option("path", target.toString)
       .saveAsTable(name)
@@ -620,11 +697,10 @@ final class TableCatalog(spark: SparkSession, root: String,
           s"($specKey, $specBuckets) vs requested ($key, $buckets) — " +
           "registering the caller's spec would plan a HashPartitioning " +
           "the files don't have")
-      val schema = spark.read.format(format).load(dir.toString).schema
-      val cols = schema.fields
+      val cols = scan(dir).schema.fields
         .map(f => s"`${f.name}` ${f.dataType.sql}").mkString(", ")
       spark.sql(
-        s"""CREATE TABLE `$name` ($cols) USING $format
+        s"""CREATE TABLE `$name` ($cols) USING parquet
            |CLUSTERED BY (`$specKey`) INTO $specBuckets BUCKETS
            |LOCATION '${dir.toString}'""".stripMargin)
     }
@@ -643,31 +719,10 @@ final class TableCatalog(spark: SparkSession, root: String,
     // readers
     writePointer(layer, table, next)
     val fs = hadoopFs(pointerPath(layer, table))
-    // retention vacuum — never touches the version just committed, the
-    // keepVersions-1 before it, or a version a live RESTORE/CLONE has
-    // pinned mid-copy. The pin read AND the deletes must sit under the
-    // table lock: pins are TAKEN under it, so a lockless sweep could read
-    // the pin set, lose the CPU while a pin lands, then delete the
-    // freshly-pinned version — the yanked-mid-copy race again, this time
-    // on the commit path instead of the vacuum verb.
+    // retention vacuum; the lock is taken only when a version is past it
     if (versions(layer, table).dropRight(keepVersions).nonEmpty)
-      withTableLock(layer, table) {
-        val pinnedHere = pinnedVersions(layer, table)
-        val lockPath = new Path(path(layer, table), "_LOCK")
-        sweepTrash(layer, table)
-        versions(layer, table).dropRight(keepVersions)
-          .filterNot(pinnedHere.contains)
-          .foreach { v =>
-            reclaimVersionDir(layer, table, v)
-            // renew the lock's mtime between version-dir deletes: holder
-            // staleness is judged from that mtime (staleLockMs = 60s), so
-            // a retention sweep of many large version dirs that runs past
-            // 60s would otherwise let a contender break a LIVE holder's
-            // lock and reopen the concurrent-metadata-writer race
-            try fs.setTimes(lockPath, System.currentTimeMillis(), -1)
-            catch { case _: java.io.IOException => () } // best-effort
-          }
-      }
+      withTableLock(layer, table)(
+        reclaimPastRetention(layer, table, keepVersions))
     // a previously-APPENDED table's flat files were superseded by the
     // first versioned commit (read() follows the pointer); give them one
     // commit cycle of grace for in-flight readers, then vacuum them too.
@@ -695,6 +750,37 @@ final class TableCatalog(spark: SparkSession, root: String,
           fs.delete(st.getPath, true)
       }
     }
+  }
+
+  /** Retention sweep shared by every reclamation path — `publishVersion`,
+    * the `vacuum` verb and `overwriteOptimistic`'s commit tail. Run with
+    * the table `_LOCK` held: sweeps `_v/.trash_*` orphans, then reclaims
+    * every version older than the newest `keepLast` that is neither live
+    * nor pinned by a live RESTORE/CLONE. The pin read AND the deletes sit
+    * under the lock because pins are TAKEN under it: a lockless sweep
+    * could read the pin set, lose the CPU while a pin lands, then delete
+    * the freshly pinned version mid-copy. Returns the versions reclaimed.
+    */
+  private def reclaimPastRetention(layer: String, table: String,
+      keepLast: Int): Seq[Int] = {
+    val live = currentVersion(layer, table)
+    val pinned = pinnedVersions(layer, table)
+    val lockPath = new Path(path(layer, table), "_LOCK")
+    val fs = hadoopFs(lockPath)
+    sweepTrash(layer, table)
+    val dropped = versions(layer, table).dropRight(keepLast)
+      .filterNot(live.contains).filterNot(pinned.contains)
+    dropped.foreach { v =>
+      reclaimVersionDir(layer, table, v)
+      // renew the lock's mtime between version-dir deletes: holder
+      // staleness is judged from that mtime (staleLockMs = 60s), so a
+      // sweep of many large version dirs that runs past 60s would
+      // otherwise let a contender break a LIVE holder's lock and reopen
+      // the concurrent-metadata-writer race
+      try fs.setTimes(lockPath, System.currentTimeMillis(), -1)
+      catch { case _: java.io.IOException => () } // best-effort
+    }
+    dropped
   }
 
   /** Newest committed version by the OPTIMISTIC protocol's definition:
@@ -878,9 +964,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     val next = expected.getOrElse(0) + 1
     val staging = new Path(path(layer, table),
       "_staging/" + java.util.UUID.randomUUID().toString.replace("-", ""))
-    val w = df.write.mode(SaveMode.Overwrite).format(format)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .save(staging.toString)
+    writeParquet(df, staging, SaveMode.Overwrite, partitionBy)
     val target = versionDir(layer, table, next)
     val fs = hadoopFs(target)
     fs.mkdirs(target.getParent)
@@ -909,11 +993,7 @@ final class TableCatalog(spark: SparkSession, root: String,
       withTableLock(layer, table) {
         if (currentVersion(layer, table).forall(_ < next))
           writePointer(layer, table, next)
-        val pinned = pinnedVersions(layer, table)
-        sweepTrash(layer, table)
-        versions(layer, table).dropRight(keepVersions)
-          .filterNot(pinned.contains)
-          .foreach(v => reclaimVersionDir(layer, table, v))
+        reclaimPastRetention(layer, table, keepVersions)
       }
     }
   }
@@ -989,9 +1069,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     */
   private def hasFlatData(layer: String, table: String): Boolean = {
     val dir = new Path(path(layer, table))
-    val fs = hadoopFs(dir)
-    fs.exists(dir) &&
-      fs.listStatus(dir).exists(!_.getPath.getName.startsWith("_"))
+    hadoopFs(dir).exists(dir) && dataFiles(dir).hasNext
   }
 
   /** Hive-style partition columns of the live snapshot, read back from the
@@ -1022,18 +1100,6 @@ final class TableCatalog(spark: SparkSession, root: String,
 
   private val mergeSrcCol = "__graft_merge_src"
   private val mergeRnCol = "__graft_merge_rn"
-
-  /** Live snapshot read with an EXPLICIT schema: a user-specified schema
-    * bypasses hive partition-column type inference entirely, so rewrite
-    * paths can't let inference retype numeric-looking string partition
-    * values (month=01 → bigint 1) and commit the coerced values — and,
-    * unlike toggling the inference session conf, it cannot race other
-    * threads' reads on the shared session (concurrent READERS are this
-    * class's documented isolation target).
-    */
-  private def readWithSchema(layer: String, table: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    spark.read.format(format).schema(schema).load(livePath(layer, table))
 
   /** Keyed MERGE (whole-row upsert): the `MERGE INTO … WHEN MATCHED UPDATE
     * WHEN NOT MATCHED INSERT` surface the reference's Delta stack offers.
@@ -1096,8 +1162,8 @@ final class TableCatalog(spark: SparkSession, root: String,
       // schema (one footer read) and fail loudly instead. Widening
       // batches (new columns) remain legal schema evolution: the stored
       // side null-pads through the explicit-schema read.
-      val storedCols = spark.read.format(format)
-        .load(livePath(layer, table)).schema.fieldNames
+      val live = new Path(livePath(layer, table))
+      val storedCols = scan(live).schema.fieldNames
       val batchLower = batch.columns.map(_.toLowerCase).toSet
       val dropped = storedCols.filterNot(c => batchLower.contains(c.toLowerCase))
       require(dropped.isEmpty,
@@ -1105,10 +1171,13 @@ final class TableCatalog(spark: SparkSession, root: String,
           s"${dropped.mkString(", ")}; a narrower batch would silently " +
           "drop them from every row — select the full column set " +
           "(pad with nulls explicitly if that loss is intended)")
-      // an explicit schema on the stored read keeps partition VALUES
-      // verbatim (no lossy string→numeric inference round trip) with the
-      // batch's types
-      val stored = readWithSchema(layer, table, batch.schema)
+      // the batch's schema on the stored read keeps partition VALUES
+      // verbatim: a stated partition column type bypasses hive
+      // partition-type inference, so numeric-looking string values
+      // (month=01) are never retyped (bigint 1) and committed coerced —
+      // and, unlike toggling the inference session conf, it cannot race
+      // other threads' reads on the shared session
+      val stored = scan(live, schema = Some(batch.schema))
       val all = batch.withColumn(mergeSrcCol, lit(1))
         .unionByName(stored.withColumn(mergeSrcCol, lit(0)))
       // final content-hash tie-breaker: deterministic winner even for
@@ -1190,25 +1259,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     if (versions(layer, table).dropRight(keepLast)
         .filterNot(currentVersion(layer, table).contains).isEmpty)
       return Seq.empty
-    withTableLock(layer, table) {
-      val cur = currentVersion(layer, table)
-      val pinned = pinnedVersions(layer, table)
-      val fs = hadoopFs(new Path(path(layer, table)))
-      val dropped = versions(layer, table).dropRight(keepLast)
-        .filterNot(cur.contains)
-        .filterNot(pinned.contains)
-      val lockPath = new Path(path(layer, table), "_LOCK")
-      sweepTrash(layer, table)
-      dropped.foreach { v =>
-        reclaimVersionDir(layer, table, v)
-        // same holder-staleness renewal as publishVersion's sweep: keep
-        // the lock's mtime fresh so a >60s multi-version delete can't be
-        // judged stale and broken mid-hold
-        try fs.setTimes(lockPath, System.currentTimeMillis(), -1)
-        catch { case _: java.io.IOException => () }
-      }
-      dropped
-    }
+    withTableLock(layer, table)(reclaimPastRetention(layer, table, keepLast))
   }
 
   /** Version pins: a copier-side lease that keeps ONE retained snapshot
@@ -1403,14 +1454,8 @@ final class TableCatalog(spark: SparkSession, root: String,
     // constraint/generated-column metadata rides along (Delta deep-CLONE
     // copies table properties); version-op tags (_TAG_op_*) do not — the
     // clone's history starts at its own CLONE commit below
-    val srcDir = new Path(path(srcLayer, srcTable))
-    if (fs.exists(srcDir)) {
-      fs.listStatus(srcDir).map(_.getPath.getName)
-        .filter(n => n.startsWith("_TAG_") && !n.startsWith("_TAG_op_")
-          && !n.contains(".__tmp"))
-        .map(_.stripPrefix("_TAG_"))
-        .foreach(k => readTag(srcLayer, srcTable, k)
-          .foreach(v => writeTag(dstLayer, dstTable, k, v)))
+    tags(srcLayer, srcTable, "").foreach { case (k, v) =>
+      if (!k.startsWith("op_")) writeTag(dstLayer, dstTable, k, v)
     }
     publishVersion(dstLayer, dstTable, 1, None)
     recordOp(dstLayer, dstTable, 1, "CLONE")
@@ -1425,17 +1470,23 @@ final class TableCatalog(spark: SparkSession, root: String,
     writeTag(layer, table, s"check_$name", sqlExpr)
 
   /** Declared CHECK constraints, name → expression. */
-  def checks(layer: String, table: String): Map[String, String] = {
+  def checks(layer: String, table: String): Map[String, String] =
+    tags(layer, table, "check_")
+
+  /** Committed tags whose key starts with `prefix`, prefix stripped →
+    * value. */
+  private def tags(layer: String, table: String,
+      prefix: String): Map[String, String] = {
     val dir = new Path(path(layer, table))
     val fs = hadoopFs(dir)
     if (!fs.exists(dir)) Map.empty
     else fs.listStatus(dir).toSeq
       .map(_.getPath.getName)
       // contains, not endsWith: writeSwapFile temps are `_TAG_*.__tmp<uuid>`,
-      // so a crash-orphaned temp would otherwise read as a live constraint
-      .filter(n => n.startsWith("_TAG_check_") && !n.contains(".__tmp"))
-      .map(_.stripPrefix("_TAG_check_"))
-      .flatMap(n => readTag(layer, table, s"check_$n").map(n -> _))
+      // so a crash-orphaned temp would otherwise read as a live tag
+      .filter(n => n.startsWith("_TAG_" + prefix) && !n.contains(".__tmp"))
+      .map(_.stripPrefix("_TAG_" + prefix))
+      .flatMap(k => readTag(layer, table, prefix + k).map(k -> _))
       .toMap
   }
 
@@ -1468,17 +1519,8 @@ final class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** Declared generated columns, name → expression. */
-  def generatedColumns(layer: String, table: String): Map[String, String] = {
-    val dir = new Path(path(layer, table))
-    val fs = hadoopFs(dir)
-    if (!fs.exists(dir)) Map.empty
-    else fs.listStatus(dir).toSeq
-      .map(_.getPath.getName)
-      .filter(n => n.startsWith("_TAG_gen_") && !n.contains(".__tmp"))
-      .map(_.stripPrefix("_TAG_gen_"))
-      .flatMap(n => readTag(layer, table, s"gen_$n").map(n -> _))
-      .toMap
-  }
+  def generatedColumns(layer: String, table: String): Map[String, String] =
+    tags(layer, table, "gen_")
 
   /** ACID overwrite gated by the table's declared constraints (Delta's
     * write-time contract): CHECK expressions — rows where any evaluates
@@ -1565,17 +1607,6 @@ final class TableCatalog(spark: SparkSession, root: String,
     }.toDF("version", "operation", "commit_ms", "is_live")
   }
 
-  /** Columns the live snapshot's stats sidecar covers (empty when none) —
-    * the `statsCols` a DML rewrite must re-record to keep data skipping
-    * alive across the commit.
-    */
-  private def liveStatsCols(layer: String, table: String): Seq[String] =
-    fileStats(layer, table) match {
-      case None => Nil
-      case Some(stats) => stats.schema.fieldNames.toSeq
-        .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
-    }
-
   /** Shared core of the copy-on-write DML verbs (`deleteWhere` /
     * `updateWhere`): commit a new snapshot equal to
     * `transform(live snapshot)`, rewriting as FEW files as possible.
@@ -1608,8 +1639,11 @@ final class TableCatalog(spark: SparkSession, root: String,
       s"$layer/$table is not snapshot-versioned; DML verbs rewrite " +
         "snapshots — overwrite the table once to adopt snapshot mode")
     val parts = partitionColumnsOf(layer, table)
-    val statsCols = liveStatsCols(layer, table)
     val statsOpt = fileStats(layer, table)
+    // the columns the live sidecar covers: the rewrite re-records them to
+    // keep data skipping alive across the commit
+    val statsCols = statsOpt.toSeq.flatMap(_.schema.fieldNames
+      .filter(_.startsWith("min_")).map(_.stripPrefix("min_")))
     val usePrune = statsOpt.isDefined && pruneRanges.nonEmpty
     if (!usePrune) {
       Some(overwrite(rewrite(read(layer, table)), layer, table, parts,
@@ -1630,18 +1664,8 @@ final class TableCatalog(spark: SparkSession, root: String,
         val full = p.toUri.getPath
         full.stripPrefix(liveUri).stripPrefix("/")
       }
-      val allFiles = {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[Path]
-        val it = fs.listFiles(live, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          val rel = relOf(f)
-          if (!rel.startsWith("_") && !rel.contains("/_")) buf += f
-        }
-        buf.toSeq
-      }
-      val (rewriteFiles, keepFiles) =
-        allFiles.partition(f => touchedNames.contains(f.getName))
+      val (rewriteFiles, keepFiles) = dataFiles(live).toSeq
+        .partition(f => touchedNames.contains(f.getName))
       if (rewriteFiles.isEmpty) {
         // nothing can match: the snapshot is unchanged — commit nothing
         // (Delta's no-op DELETE also skips the commit)
@@ -1649,25 +1673,11 @@ final class TableCatalog(spark: SparkSession, root: String,
       }
       val next = prevCommitted.get + 1
       val target = versionDir(layer, table, next)
-      val touchedRows = spark.read.format(format)
-        .option("basePath", live.toString)
-        .load(rewriteFiles.map(_.toString): _*)
-      val w = rewrite(touchedRows).write
-        .mode(SaveMode.Overwrite).format(format)
-      (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-        .save(target.toString)
-      // names of the freshly rewritten files, BEFORE raw copies join them
-      val newNames = {
-        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-        val it = fs.listFiles(target, true)
-        while (it.hasNext) {
-          val f = it.next().getPath
-          val rel = f.toUri.getPath
-            .stripPrefix(target.toUri.getPath).stripPrefix("/")
-          if (!rel.startsWith("_") && !rel.contains("/_")) buf += f.getName
-        }
-        buf.toSet
-      }
+      writeParquet(rewrite(scan(live, rewriteFiles)), target,
+        SaveMode.Overwrite, parts)
+      // the freshly rewritten files, BEFORE raw copies join them
+      val newFiles = dataFiles(target).toSeq
+      val newNames = newFiles.map(_.getName).toSet
       // byte-for-byte copy of provably-untouched files, partition subdirs
       // preserved (server-side copy on object stores; no decode)
       val conf = spark.sessionState.newHadoopConf()
@@ -1692,23 +1702,9 @@ final class TableCatalog(spark: SparkSession, root: String,
           .drop(statsRelCol, statsGrpCol)
           .filter(!col(statsFileCol).isin(touchedNames.toSeq: _*))
           .join(keptRel, Seq(statsFileCol))
-        val newFilePaths = {
-          val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-          val it = fs.listFiles(target, true)
-          while (it.hasNext) {
-            val f = it.next().getPath
-            if (newNames.contains(f.getName) &&
-                !f.toString.contains("/_stats/")) buf += f.toString
-          }
-          buf.toSeq
-        }
         val newStats =
-          if (newFilePaths.isEmpty) None
-          else Some(perFileStats(
-            spark.read.format(format)
-              .option("basePath", target.toString)
-              .load(newFilePaths: _*),
-            target, statsCols))
+          if (newFiles.isEmpty) None
+          else Some(perFileStats(scan(target, newFiles), target, statsCols))
         writeStatsSidecars(target, statsCols,
           newStats.map(keptStats.unionByName(_)).getOrElse(keptStats))
       }
@@ -1766,9 +1762,8 @@ final class TableCatalog(spark: SparkSession, root: String,
     * `overwrite` writes it, and `_CURRENT` is swapped only if that
     * snapshot holds a row. The plan runs once — no cache, no separate
     * emptiness pass (the reference ran its plan twice; SURVEY.md §3.2
-    * step 5 flags it). For parquet the test reads footer record counts,
-    * without a Spark job, and stops at the first non-empty file; any
-    * other format reads the written dir back. An empty snapshot is
+    * step 5 flags it). The test reads footer record counts, without a
+    * Spark job, and stops at the first non-empty file. An empty snapshot is
     * deleted unpublished, along with the table and `_v` dirs when this
     * call created them, so the pointer, `versions()` and the retention
     * vacuum are exactly as before the call.
@@ -1782,7 +1777,7 @@ final class TableCatalog(spark: SparkSession, root: String,
     val created = Seq(tableDir, new Path(tableDir, "_v")).filterNot(fs.exists)
     val (prevCommitted, next, target) =
       writeNextVersion(df, layer, table, partitionBy)
-    if (holdsRow(target, df.schema)) {
+    if (holdsRow(target)) {
       publishVersion(layer, table, next, prevCommitted)
       true
     } else {
@@ -1795,26 +1790,8 @@ final class TableCatalog(spark: SparkSession, root: String,
   }
 
   /** True when the snapshot written at `dir` holds at least one row. */
-  private def holdsRow(dir: Path,
-      schema: org.apache.spark.sql.types.StructType): Boolean =
-    if (format != "parquet")
-      !spark.read.format(format).schema(schema).load(dir.toString).isEmpty
-    else {
-      val conf = spark.sessionState.newHadoopConf()
-      val fs = dir.getFileSystem(conf)
-      // data files as Spark lists them: `_`/`.`-prefixed names (the
-      // `_SUCCESS` marker, crc sidecars) are not part of the snapshot
-      def dataFiles(d: Path): Iterator[Path] =
-        fs.listStatus(d).iterator
-          .filterNot(st => st.getPath.getName.startsWith("_") ||
-            st.getPath.getName.startsWith("."))
-          .flatMap(st =>
-            if (st.isDirectory) dataFiles(st.getPath) else Iterator(st.getPath))
-      dataFiles(dir).exists { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
-        try reader.getRecordCount > 0 finally reader.close()
-      }
-    }
+  private def holdsRow(dir: Path): Boolean =
+    dataFiles(dir).exists(withFooter(_)(_.getRecordCount > 0))
 
   // ---------------------------------------------------------------- stats
 
@@ -1840,9 +1817,8 @@ final class TableCatalog(spark: SparkSession, root: String,
     * ranges are actually narrow per file.
     */
   private def writeFileStats(target: Path, statsCols: Seq[String]): Unit = {
-    val written = spark.read.format(format).load(target.toString)
     writeStatsSidecars(target, statsCols,
-      perFileStats(written, target, statsCols))
+      perFileStats(scan(target), target, statsCols))
   }
 
   /** One stats row per data file of `written` (which must be rooted at the
@@ -1895,37 +1871,34 @@ final class TableCatalog(spark: SparkSession, root: String,
       ((row_number().over(Window.orderBy(
         col(s"min_${statsCols.head}").asc_nulls_last,
         col(statsFileCol))) - 1) / statsGroupFiles).cast("int"))
-    grouped.coalesce(1).sortWithinPartitions(col(statsGrpCol))
-      .write.mode(SaveMode.Overwrite).format(format)
-      .save(new Path(target, "_stats").toString)
+    writeParquet(grouped.coalesce(1).sortWithinPartitions(col(statsGrpCol)),
+      new Path(target, "_stats"), SaveMode.Overwrite)
     val rollAggs = statsCols.flatMap(c => Seq(
       min(col(s"min_$c")).as(s"min_$c"),
       max(col(s"max_$c")).as(s"max_$c"),
       max(col(s"min_$c").isNull).as(s"null_$c")))
-    grouped.groupBy(col(statsGrpCol))
-      .agg(rollAggs.head, rollAggs.tail: _*)
-      .coalesce(1)
-      .write.mode(SaveMode.Overwrite).format(format)
-      .save(new Path(target, "_stats_rollup").toString)
+    writeParquet(grouped.groupBy(col(statsGrpCol))
+        .agg(rollAggs.head, rollAggs.tail: _*).coalesce(1),
+      new Path(target, "_stats_rollup"), SaveMode.Overwrite)
   }
 
   /** The live snapshot's file-stats sidecar, if the committing overwrite
     * recorded one (`statsCols` non-empty).
     */
-  def fileStats(layer: String, table: String): Option[DataFrame] = {
-    val statsPath = new Path(livePath(layer, table), "_stats")
-    if (!hadoopFs(statsPath).exists(statsPath)) None
-    else Some(spark.read.format(format).load(statsPath.toString))
-  }
+  def fileStats(layer: String, table: String): Option[DataFrame] =
+    sidecar(new Path(livePath(layer, table)), "_stats")
 
   /** The live snapshot's group-rollup sidecar, if the committing write
     * recorded one (r15+ two-level format): one row per `statsGroupFiles`
     * files with the group's min/max envelope and all-null flags.
     */
-  def statsRollup(layer: String, table: String): Option[DataFrame] = {
-    val p = new Path(livePath(layer, table), "_stats_rollup")
-    if (!hadoopFs(p).exists(p)) None
-    else Some(spark.read.format(format).load(p.toString))
+  def statsRollup(layer: String, table: String): Option[DataFrame] =
+    sidecar(new Path(livePath(layer, table)), "_stats_rollup")
+
+  /** The `name` sidecar of the snapshot at `live`, if it was recorded. */
+  private def sidecar(live: Path, name: String): Option[DataFrame] = {
+    val p = new Path(live, name)
+    if (hadoopFs(p).exists(p)) Some(scan(p)) else None
   }
 
   /** Data-skipping range read: prune the live snapshot's files against the
@@ -1955,66 +1928,44 @@ final class TableCatalog(spark: SparkSession, root: String,
       ranges.foldLeft(df) { case (d, (c, lo, hi)) =>
         d.filter(col(c) >= lit(lo) && col(c) <= lit(hi))
       }
-    def emptyResult(live: Path): DataFrame = {
-      val schema = spark.read.format(format).load(live.toString).schema
-      residual(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    }
-    fileStats(layer, table) match {
+    val live = new Path(livePath(layer, table))
+    def survivors(files: Seq[Path]): DataFrame = residual(
+      if (files.isEmpty) scan(live).where(lit(false)) else scan(live, files))
+    sidecar(live, "_stats") match {
       case None => residual(read(layer, table))
       case Some(stats) =>
-        val live = new Path(livePath(layer, table))
         // group-level pruning first, when the snapshot carries the rollup
-        val rollPath = new Path(live, "_stats_rollup")
-        val fileLevel =
-          if (!hadoopFs(rollPath).exists(rollPath)) stats
-          else {
-            val roll = spark.read.format(format).load(rollPath.toString)
+        val fileLevel = sidecar(live, "_stats_rollup") match {
+          case None => stats
+          case Some(roll) =>
             val keepG = ranges.foldLeft(roll) { case (sdf, (c, lo, hi)) =>
               sdf.filter(col(s"null_$c") ||
                 (col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)))
             }
             val grps = keepG.select(col(statsGrpCol)).collect()
               .map(_.getInt(0)).toSeq
-            if (grps.isEmpty) return emptyResult(live)
+            if (grps.isEmpty) return survivors(Nil)
             // `_stats` is sorted by group id: this pushed filter skips the
             // non-surviving row-group spans instead of decoding them
             stats.filter(col(statsGrpCol).isin(grps: _*))
-          }
+        }
         val keep = ranges.foldLeft(fileLevel) { case (sdf, (c, lo, hi)) =>
           sdf.filter(col(s"min_$c").isNull ||
             (col(s"max_$c") >= lit(lo) && col(s"min_$c") <= lit(hi)))
         }
-        if (stats.schema.fieldNames.contains(statsRelCol)) {
-          // survivors carry their snapshot-relative path: schedule them
-          // directly, never listing the snapshot
-          val rels = keep.select(col(statsRelCol)).collect()
-            .map(_.getString(0))
-          if (rels.isEmpty) emptyResult(live)
-          else residual(spark.read.format(format)
-            .option("basePath", live.toString)
-            .load(rels.map(r => new Path(live, r).toString).toIndexedSeq: _*))
-        } else {
-          // pre-r15 sidecar: name-set prune over a recursive listing
-          val names = keep.select(col(statsFileCol)).collect()
-            .map(_.getString(0)).toSet
-          if (names.isEmpty) emptyResult(live)
+        survivors(
+          if (stats.schema.fieldNames.contains(statsRelCol))
+            // survivors carry their snapshot-relative path: schedule them
+            // directly, never listing the snapshot
+            keep.select(col(statsRelCol)).collect()
+              .map(r => new Path(live, r.getString(0))).toSeq
           else {
-            val fs = hadoopFs(live)
-            val files = scala.collection.mutable.ArrayBuffer.empty[String]
-            val it = fs.listFiles(live, true)
-            while (it.hasNext) {
-              val f = it.next()
-              if (names.contains(f.getPath.getName) &&
-                  !f.getPath.toString.contains("/_stats/"))
-                files += f.getPath.toString
-            }
-            // basePath keeps hive partition columns of partitioned layouts
-            residual(spark.read.format(format)
-              .option("basePath", live.toString)
-              .load(files.toSeq: _*))
-          }
-        }
+            // pre-r15 sidecar: name-set prune over the data-file listing
+            val names = keep.select(col(statsFileCol)).collect()
+              .map(_.getString(0)).toSet
+            if (names.isEmpty) Nil
+            else dataFiles(live).filter(f => names.contains(f.getName)).toSeq
+          })
     }
   }
 }

@@ -33,6 +33,10 @@ class GoldJobSpec extends SparkSpec {
     * and only the pair set cached. */
   private val DriverDecidedJobs = 14
 
+  /** The same count with the two silver tables opened from the schema in
+    * their parquet footers instead of by one schema-inference job each. */
+  private val CatalogOpenedJobs = 12
+
   /** New generated classes allowed in a steady round of one default and
     * one capped `runCycle` on the two-regime fixture. With the statistics
     * frame cached and the dense list broadcast into two anti joins, three
@@ -193,6 +197,8 @@ class GoldJobSpec extends SparkSpec {
     // the statistics frame again, or running a job for the culled count or
     // the dense summary rows, would pass the bounds above
     assert(jobs.get() <= DriverDecidedJobs, s"${jobs.get()} jobs")
+    // and no more than with each catalog read opened without a job
+    assert(jobs.get() <= CatalogOpenedJobs, s"${jobs.get()} jobs")
   }
 
   test("no anti join in a pair plan, with or without dense cells") {

@@ -1,6 +1,9 @@
 package graft
 
 import graft.catalog.TableCatalog
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class TableCatalogSpec extends SparkSpec {
@@ -170,12 +173,57 @@ class TableCatalogSpec extends SparkSpec {
     writeThenPublish(new TableCatalog(spark, tmpDir("cat-wtp")))
   }
 
-  test("overwriteIfNonEmpty on a json catalog: the read-back emptiness " +
-      "test gives the parquet results") {
-    // a parquet footer read of a json file would throw, so passing means
-    // the non-parquet path decided every publish
-    writeThenPublish(new TableCatalog(spark, tmpDir("cat-wtp-json"),
-      format = "json"))
+  /** `open`'s result and the Spark jobs it submitted, counted by job group
+    * as `GoldJobSpec` counts a gold cycle's jobs. */
+  private def withJobCount[A](open: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = "catalog-open-" + java.util.UUID.randomUUID()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties)
+            .exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "catalog open")
+      val out = try open finally sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      (out, jobs.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("opening a snapshot submits no Spark job and gives the schema " +
+      "Spark infers, partition column types included") {
+    val cat = new TableCatalog(spark, tmpDir("cat-open"))
+    val df = Seq((1L, "a", 0.5, "00"), (2L, null, 1.5, "01"),
+      (3L, "c", 2.5, "02")).toDF("k", "s", "v", "month")
+    assert(!df.schema("k").nullable, "fixture must carry a non-null column")
+    cat.append(df, "silver", "flat")
+    cat.append(df, "silver", "flat")
+    cat.overwrite(df, "silver", "ver", statsCols = Seq("k"))
+    cat.overwrite(df, "silver", "part", partitionBy = Seq("month"))
+    val ver = cat.livePath("silver", "ver")
+    def opensLikeSpark(what: String, dir: String)(open: => DataFrame) = {
+      val (opened, jobs) = withJobCount(open)
+      assert(jobs === 0, s"$what submitted $jobs Spark jobs")
+      assert(opened.schema === spark.read.parquet(dir).schema, what)
+    }
+    opensLikeSpark("flat append read", cat.path("silver", "flat"))(
+      cat.read("silver", "flat"))
+    opensLikeSpark("versioned read", ver)(cat.read("silver", "ver"))
+    opensLikeSpark("partitionBy read", cat.livePath("silver", "part"))(
+      cat.read("silver", "part"))
+    opensLikeSpark("readVersion", ver)(cat.readVersion("silver", "ver", 1))
+    opensLikeSpark("fileStats", s"$ver/_stats")(
+      cat.fileStats("silver", "ver").get)
+    opensLikeSpark("statsRollup", s"$ver/_stats_rollup")(
+      cat.statsRollup("silver", "ver").get)
+    // "00".."02" are discovered as int, as an inferring read discovers them
+    assert(cat.read("silver", "part").schema("month").dataType ===
+      org.apache.spark.sql.types.IntegerType)
+    assert(cat.read("silver", "flat").count() === 6)
   }
 
   test("partitionBy produces hive layout and partition pruning prunes") {
@@ -680,15 +728,6 @@ class TableCatalogSpec extends SparkSpec {
     assert(out.filter(col("v") > 0.0).count() === 190L)
     // partition column still prunes after the DML commit
     assert(out.filter(col("grp") === "g1").count() === 100L)
-  }
-
-  test("non-parquet catalog format roundtrips through append/overwrite") {
-    val cat = new TableCatalog(spark, tmpDir("cat-json"), format = "json")
-    cat.append(Seq((1L, "a")).toDF("id", "v"), "silver", "j")
-    cat.append(Seq((2L, "b")).toDF("id", "v"), "silver", "j")
-    assert(cat.read("silver", "j").count() === 2)
-    cat.overwrite(Seq((9L, "z")).toDF("id", "v"), "silver", "j")
-    assert(cat.read("silver", "j").select("id").as[Long].collect().toSeq === Seq(9L))
   }
 
   test("vacuum: reclaims old versions only, never the live one, typed reads after") {

@@ -10,17 +10,17 @@ import org.apache.spark.sql.functions._
 /** The reader-vs-vacuum half-deleted-dir race (VERDICT r11 "What's wrong"
   * #1): a plain recursive delete of a version dir removes the data files
   * BEFORE the directory itself, so a lock-free reader that resolved the
-  * pointer inside that window analyzed an existing-but-empty dir to
-  * `UNABLE_TO_INFER_SCHEMA` — a manifestation `read()`'s dir-GONE retry
-  * did not cover (caught live by CrossJvmStormSpec, 1-in-2 full-suite
-  * judge runs). Two mechanisms close it, each pinned here:
+  * pointer inside that window found an existing but empty dir, a state
+  * `read()`'s dir-gone retry did not then cover (caught live by
+  * CrossJvmStormSpec, 1-in-2 full-suite runs). Two mechanisms close it,
+  * each pinned here:
   *
   *  1. `reclaimVersionDir` renames the dir aside (`_v/.trash_<uuid>`)
   *     atomically before deleting, so racing readers only ever see
   *     dir-present-and-complete or dir-missing;
-  *  2. `read()`'s retry additionally covers the empty-dir manifestation
-  *     (`UNABLE_TO_INFER_SCHEMA`) as defense-in-depth for rename-less
-  *     stores.
+  *  2. opening a version dir that holds no data file raises the typed
+  *     `VacuumedVersionException`, which `read()`'s re-resolve retry
+  *     catches: the defense for stores without a directory rename.
   */
 class VacuumRaceSpec extends SparkSpec {
   import spark.implicits._
@@ -51,8 +51,8 @@ class VacuumRaceSpec extends SparkSpec {
     // budget is 150ms across 5 attempts; 30ms lands inside attempt 2-3)
     val fixer = new Thread(() => { Thread.sleep(30); setPointer(2) })
     fixer.start()
-    // must NOT throw: attempt 1 sees the empty dir (UNABLE_TO_INFER_SCHEMA
-    // or dir-missing on a re-listing), the retry re-resolves to v2
+    // must NOT throw: attempt 1 finds no data file in v1 (or, on a
+    // re-listing, no dir), and the retry re-resolves to v2
     val n = cat.read("gold", "t").count()
     fixer.join()
     assert(n == 50L, s"re-resolve returned $n rows, want v2's 50")
