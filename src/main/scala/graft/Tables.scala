@@ -13,8 +13,50 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The table, opened with its memoized schema: only the first open of a
+    * file runs Spark's parquet schema-inference job. The memo key is the
+    * path; the name, length and modification time of the file, or of each
+    * data file directly under a table directory (a rewritten file is
+    * inferred again); and the session confs that change what inference
+    * returns. `spark.sql.legacy.parquet.nanosAsLong`, which `events` turns
+    * on for the session, is kept beside the schema instead: with it off,
+    * inference fails on a TIMESTAMP(NANOS) column, so a schema inferred
+    * with it off also holds with it on, and the flip costs no table
+    * opened before it a second inference.
+    */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val nanosAsLong = spark.conf.get(NanosAsLong, "false").toBoolean
+    val (schema, _) = schemaCache.compute(schemaKey(spark, path),
+      (_, hit) =>
+        if (hit != null && (nanosAsLong || !hit._2)) hit
+        else (spark.read.parquet(path).schema, nanosAsLong))
+    spark.read.schema(schema).parquet(path)
+  }
+
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** key -> (schema, whether it was inferred with `NanosAsLong` on) */
+  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (org.apache.spark.sql.types.StructType, Boolean)]()
+
+  private val inferenceConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private def schemaKey(spark: SparkSession, path: String): String = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val files = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(p)
+      .filterNot(f => f.getPath.getName.startsWith("_") ||
+        f.getPath.getName.startsWith("."))
+      .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
+      .sorted
+    val confs = inferenceConfs.map(k => s"$k=${spark.conf.getOption(k)}")
+    (path +: (files ++ confs)).mkString("|")
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = apply(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = apply(s, d, "nation")
@@ -35,7 +77,7 @@ object Tables {
     * plain TimestampType and never branches on the file's vintage.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    s.conf.set(NanosAsLong, "true")
     val df = apply(s, d, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -31,9 +31,12 @@ object Clusters {
     * stops early (almost always) before it.
     *
     * Near-dup pair lists are usually minuscule relative to the corpus
-    * that produced them, so a small edge list is solved in driver memory
-    * by union-find (`DriverGraph` — one job instead of 2 per propagation
-    * round); results are identical on both paths, spec-pinned.
+    * that produced them, so a list of at most `DriverGraph.MaxEdges` raw
+    * pairs is solved in driver memory by union-find (`DriverGraph`): one
+    * lazy pin of the pairs, one count and one collect of it, instead of a
+    * symmetrized edge checkpoint and 2 jobs per propagation round. The
+    * pair plan runs exactly once on every path; results are identical on
+    * both paths, spec-pinned.
     */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 15, bucketedAtEdges: Long = Graph.BucketedPinAtEdges,
@@ -54,8 +57,13 @@ object Clusters {
       offload: Boolean): DataFrame = {
     val fwd = pairs.select(col(aCol).cast("long").as("src"),
                            col(bCol).cast("long").as("dst"))
-    val derived = fwd
-      .union(fwd.select(col("dst").as("src"), col("src").as("dst")))
+    // both orientations from ONE read of `e` (a union would plan `e`
+    // twice, and the hint path below reads the unpinned pair plan)
+    def symmetrized(e: DataFrame): DataFrame = e
+      .select(explode(array(
+        struct(col("src"), col("dst")),
+        struct(col("dst").as("src"), col("src").as("dst")))).as("e"))
+      .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .distinct()
       .repartition(col("dst"))
     // A caller-known edge count past the bucketed threshold goes STRAIGHT
@@ -68,31 +76,34 @@ object Clusters {
     // offload gate (both are about small graphs).
     if (edgeCountHint.exists(_ >= bucketedAtEdges))
       return propagateLoop(
-        graft.plans.PlanBarriers.pinBucketed(derived, "dst",
+        graft.plans.PlanBarriers.pinBucketed(symmetrized(fwd), "dst",
           name = "cc_edges"), maxIter)
+    // pin the raw pair list once: its count decides the offload, and the
+    // collect or the symmetrized edge checkpoint reads the pin, so the
+    // upstream pair plan runs exactly once on every path. Union-find over
+    // raw pairs (duplicates and self-loops included) gives the same
+    // min-id components as the symmetrized edge set. See DriverGraph.
+    val raw = graft.plans.PlanBarriers.lazyPin(fwd, sizedBy = pairs)
+    val nPairs = raw.count()
+    if (offload && DriverGraph.fits(nPairs, 2L * nPairs))
+      return unionFindLocal(DriverGraph.collect(raw, "src", "dst"),
+        pairs.sparkSession)
     // symmetrize once, then pin the STATIC edge set hash(dst) — the
     // per-round join's key — through the partitioning-preserving barrier
     // (PlanBarriers scaladoc: an AQE-built checkpoint forgets its
     // partitioning and every round would re-exchange the edges, the
     // PageRank defect class). Each round then exchanges only the
     // label-table-sized aggregation, never the edges.
-    var edges = graft.plans.PlanBarriers.ckptKeepPartitioning(derived)
-
-    // the checkpoint above already materialized the edges, so this count
-    // is metadata-cheap
-    val probeCount = edges.count()
-    // see DriverGraph
-    if (offload && DriverGraph.fits(probeCount, probeCount))
-      return unionFindLocal(DriverGraph.collect(edges, "src", "dst"),
-        pairs.sparkSession)
+    var edges = graft.plans.PlanBarriers.ckptKeepPartitioning(
+      symmetrized(raw))
     // past the bucketed threshold, RE-pin the edge set as a bucketed
     // persisted table (cluster-survivable, zero storage-memory — see
-    // PlanBarriers.pinBucketed): the same count that ran the offload
-    // gate selects the pin currency, and the one-time write reads from
-    // the already-materialized checkpoint, not the raw pair derivation.
-    // Every round's join stays exchange-free on the edge side under
-    // both currencies (plan-pinned).
-    if (probeCount >= bucketedAtEdges)
+    // PlanBarriers.pinBucketed): the count of the materialized checkpoint
+    // (metadata-cheap) selects the pin currency, and the one-time write
+    // reads from that checkpoint, not the raw pair derivation. Every
+    // round's join stays exchange-free on the edge side under both
+    // currencies (plan-pinned).
+    if (edges.count() >= bucketedAtEdges)
       edges = graft.plans.PlanBarriers.pinBucketed(edges, "dst",
         name = "cc_edges")
     propagateLoop(edges, maxIter)
@@ -165,9 +176,11 @@ object Clusters {
     * the min-label loop). Output matches `connectedComponents` exactly
     * (spec-pinned, including deep-chain adversaries).
     *
-    * Small graphs are solved in driver memory by union-find like
-    * `connectedComponents` (`DriverGraph`; the per-round cost it avoids
-    * was measured on this loop).
+    * Small graphs are solved in driver memory by union-find under the
+    * same gate as `connectedComponents`: at most `DriverGraph.MaxEdges`
+    * raw pairs, counted on the one pin of the pair list that the node set
+    * and the canonical edges of the distributed loop also read (the
+    * per-round cost the offload avoids was measured on this loop).
     */
   def connectedComponentsStar(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int = 25): DataFrame =
@@ -180,8 +193,17 @@ object Clusters {
 
   private def star(pairs: DataFrame, aCol: String, bCol: String,
       maxIter: Int, offload: Boolean): DataFrame = {
-    val raw = pairs.select(col(aCol).cast("long").as("u"),
-                           col(bCol).cast("long").as("v"))
+    // the raw pair list, pinned once: its count decides the offload (see
+    // DriverGraph; union-find over raw pairs keeps self-loop-only nodes as
+    // singletons), and the node set and canonical edges below derive from
+    // the pin, so the upstream pair plan runs exactly once on every path
+    val raw = graft.plans.PlanBarriers.lazyPin(
+      pairs.select(col(aCol).cast("long").as("u"),
+                   col(bCol).cast("long").as("v")), sizedBy = pairs)
+    val spark = pairs.sparkSession
+    val nPairs = raw.count()
+    if (offload && DriverGraph.fits(nPairs, 2L * nPairs))
+      return unionFindLocal(DriverGraph.collect(raw, "u", "v"), spark)
     // node set from the UNFILTERED pairs: a self-loop-only node is still a
     // node and must come back as its own singleton cluster (parity with
     // connectedComponents)
@@ -204,25 +226,16 @@ object Clusters {
         .head().getDecimal(0)
 
     // Materialize the (lazy) canonical edge checkpoint at the SESSION
-    // width first — the count below is the action that runs the whole
-    // upstream pair cascade, which needs its parallelism — then shrink
-    // the LOOP's exchange width to the edge count (r15, guide §2.2/§2.4:
-    // every star round is ~6 exchanges over an edge table that is dup-rate
-    // sized, orders below the corpus; at the bench SF those exchanges ran
-    // 32 partitions over a few hundred rows — pure per-task floor, measured
-    // ~3 s of the gate's 4.3 s). Same corpus-scaled contract as
+    // width first, then shrink the LOOP's exchange width to the edge count
+    // (r15, guide §2.2/§2.4: every star round is ~6 exchanges over an edge
+    // table that is dup-rate sized, orders below the corpus; at the bench
+    // SF those exchanges ran 32 partitions over a few hundred rows — pure
+    // per-task floor, measured ~3 s of the gate's 4.3 s). Same
+    // corpus-scaled contract as
     // StreamScale.parts: cap = the session width every prior record was
     // measured at, so a big edge set keeps the recorded layout; results
     // are partition-count-invariant (suite-enforced).
-    val spark = pairs.sparkSession
     val nEdges = edges.count()
-    // see DriverGraph: the node set rides along because canonical star
-    // edges exclude self-loops, and its count (which materializes the
-    // lazy node checkpoint the collect reads anyway) runs only once the
-    // edge test has passed
-    if (offload && DriverGraph.fits(nEdges, nodes.count()))
-      return unionFindLocal(
-        DriverGraph.collect(edges, "u", "v", nodes = Some(nodes)), spark)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions",
       graft.streaming.StreamScale.parts(nEdges, rowsPerPart = 250000L,

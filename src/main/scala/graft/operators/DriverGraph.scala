@@ -19,13 +19,11 @@ import org.apache.spark.sql.functions.col
   * Gate discipline: nothing lands on the driver unless the caller already
   * knows the graph is small, and no gate runs a job of its own — each
   * caller passes figures it already has:
-  *  - connected components: the count that materializes its symmetrized
-  *    edge checkpoint (the job every later path reads anyway), as both
-  *    figures — a symmetrized list has no more nodes than edges;
-  *  - star CC: its canonical edge count and, only once that passes, the
-  *    count of its checkpointed node set. Canonical star edges strip
-  *    self-loops, so a self-loop-heavy pair list can have ~0 edges and
-  *    arbitrarily many nodes — the node bound closes that hole;
+  *  - connected components and star CC: the count that materializes the
+  *    pin of the RAW pair list (the job every later path reads anyway),
+  *    n edges and 2·n nodes — n pairs have at most 2·n endpoints, self-loops
+  *    and duplicates included, so the bound holds before any symmetrizing,
+  *    deduplicating or self-loop stripping runs;
   *  - triangles: the canonical edge count (n_edges is one of its outputs)
   *    and 2·nE nodes;
   *  - PageRank: the caller's edge-count UPPER bound and its nNodes
@@ -42,8 +40,8 @@ private[graft] object DriverGraph {
 
   val MaxEdges: Long = 4000000L
 
-  /** Offload admission. `nNodes` is by-name so a caller whose node figure
-    * costs a job evaluates it only after the edge test passes.
+  /** Offload admission. `nNodes` is by-name: a node figure is evaluated
+    * only once the edge test has passed.
     */
   def fits(nEdges: Long, nNodes: => Long): Boolean =
     nEdges <= MaxEdges && nNodes <= 2L * MaxEdges
@@ -55,14 +53,11 @@ private[graft] object DriverGraph {
   final class Interned(val ids: Array[Long], val src: Array[Int],
       val dst: Array[Int])
 
-  /** One collect of the (a, b) edge columns, interned. `nodes` (one long
-    * column) adds ids that need not sit on an edge — the star path's
-    * self-loop-only nodes. The gate bounds every array below Int.MaxValue.
+  /** One collect of the (a, b) edge columns, interned; every endpoint,
+    * self-loops included, becomes an id. The gate bounds every array below
+    * Int.MaxValue.
     */
-  def collect(edges: DataFrame, a: String, b: String,
-      nodes: Option[DataFrame] = None): Interned = {
-    val extraNodes =
-      nodes.fold(Array.emptyLongArray)(_.collect().map(_.getLong(0)))
+  def collect(edges: DataFrame, a: String, b: String): Interned = {
     val rows = edges.select(col(a).cast("long"), col(b).cast("long"))
       .collect()
     val n = rows.length
@@ -73,7 +68,7 @@ private[graft] object DriverGraph {
       i += 1
     }
     // dense ids = the distinct ids in ascending order
-    val sorted = ends ++ extraNodes
+    val sorted = ends.clone()
     java.util.Arrays.sort(sorted)
     var k = 0
     i = 0

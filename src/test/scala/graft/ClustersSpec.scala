@@ -114,9 +114,9 @@ class ClustersSpec extends SparkSpec {
     assert(s1 === s2)
     assert(s1d === s2)
     // self-loop-heavy adversary (r16, ADVICE r15): canonical star edges
-    // strip self-loops, so 1 canonical edge carries 21 nodes (the node
-    // gate that routes such a list away from the offload is pinned in
-    // DriverGraphSpec). Both star paths must match the plain-CC reference.
+    // strip self-loops, so 1 canonical edge carries 21 nodes (the offload
+    // gate counts raw pairs, 2 nodes each at most: DriverGraphSpec). Both
+    // star paths must match the plain-CC reference.
     val adversary = ((100L to 118L).map(i => (i, i)) ++ Seq((200L, 201L)))
       .toDF("doc1", "doc2")
     val aStar = Clusters.connectedComponentsStarDistributed(adversary,
@@ -129,6 +129,61 @@ class ClustersSpec extends SparkSpec {
     assert(aStar === aRef)
     assert(aStarFb === aRef)
     assert(aStar(200L) === 200L && aStar(201L) === 200L && aStar(100L) === 100L)
+  }
+
+  /** `rows` as a (doc1, doc2) frame whose every evaluation adds one per
+    * row to `evals`. An RDD frame has no size estimate, so the operators'
+    * pair pin takes its DISK_ONLY currency here. */
+  private def countedPairs(rows: Seq[(Long, Long)],
+      evals: org.apache.spark.util.LongAccumulator) =
+    spark.sparkContext.parallelize(rows, 2)
+      .map { r => evals.add(1); r }
+      .toDF("doc1", "doc2")
+
+  /** Spark jobs the offload path of either operator may submit: the count
+    * of the pair pin (2 under AQE) and its collect. Deciding the offload
+    * on pair-derived checkpoints instead took 4 jobs (components) and 8
+    * (star) on the fixture below, evaluating each pair row 2 and 3 times. */
+  private val OffloadJobs = 3
+
+  test("each operator evaluates its pair input exactly once, in every " +
+      "regime; the offload submits at most OffloadJobs jobs") {
+    // (1,2) twice as written and once reversed; 7 sits only on a self-loop
+    val rows = Seq((1L, 2L), (2L, 3L), (2L, 1L), (1L, 2L), (7L, 7L),
+      (10L, 11L))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 7L,
+      10L -> 10L, 11L -> 10L)
+    // every regime runs, then every miss is reported at once
+    val misses = scala.collection.mutable.ArrayBuffer.empty[String]
+    def once(regime: String, offload: Boolean)(
+        run: org.apache.spark.sql.DataFrame =>
+          org.apache.spark.sql.DataFrame): Unit = {
+      val evals = spark.sparkContext.longAccumulator(regime)
+      val (got, jobs) = withJobCount(
+        run(countedPairs(rows, evals)).as[(Long, Long)].collect().toMap)
+      if (got != expected) misses += s"$regime: clusters $got"
+      if (evals.sum != rows.size)
+        misses += s"$regime: ${evals.sum} pair-row evaluations of " +
+          s"${rows.size} rows"
+      // the result of the offload is a local frame: its collect is no job
+      if (offload && jobs > OffloadJobs)
+        misses += s"$regime submitted $jobs jobs"
+    }
+    once("components offload", offload = true)(
+      Clusters.connectedComponents(_, "doc1", "doc2"))
+    once("star offload", offload = true)(
+      Clusters.connectedComponentsStar(_, "doc1", "doc2"))
+    once("components checkpoint loop", offload = false)(
+      Clusters.connectedComponentsDistributed(_, "doc1", "doc2"))
+    once("components bucketed re-pin", offload = false)(
+      Clusters.connectedComponentsDistributed(_, "doc1", "doc2",
+        bucketedAtEdges = 1L))
+    once("components bucketed hint", offload = false)(
+      Clusters.connectedComponentsDistributed(_, "doc1", "doc2",
+        bucketedAtEdges = 1L, edgeCountHint = Some(Long.MaxValue)))
+    once("star loop", offload = false)(
+      Clusters.connectedComponentsStarDistributed(_, "doc1", "doc2"))
+    assert(misses.isEmpty, misses.mkString("\n"))
   }
 
   test("keepList drops all but one representative per cluster") {

@@ -10,6 +10,9 @@ class DriverGraphSpec extends AnyFunSuite {
   test("fits admits MaxEdges edges and rejects one more") {
     assert(fits(MaxEdges, MaxEdges))
     assert(!fits(MaxEdges + 1, 1L))
+    // the connected-components figures: n raw pairs and their 2·n endpoints
+    assert(fits(MaxEdges, 2L * MaxEdges))
+    assert(!fits(MaxEdges + 1, 2L * (MaxEdges + 1)))
   }
 
   test("fits rejects a node set past 2·MaxEdges even with one edge") {

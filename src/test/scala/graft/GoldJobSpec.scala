@@ -4,8 +4,6 @@ import graft.catalog.TableCatalog
 import graft.gold.GoldJob
 import graft.model.Fixtures
 import graft.serving.ServingQueries
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
@@ -174,31 +172,17 @@ class GoldJobSpec extends SparkSpec {
   test("a capped runCycle derives each shared frame once: fewer Spark jobs " +
       "than the per-table derivation") {
     val cat = twoRegimeCatalog("gold-jobs")
-    val sc = spark.sparkContext
-    val group = "gold-cycle-job-count"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "capped gold cycle")
-      try assert(GoldJob.runCycle(cat, Some(3L)))
-      finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() > 0)
-    assert(jobs.get() < PerTableJobs, s"${jobs.get()} jobs")
-    assert(jobs.get() <= SharedFrameJobs, s"${jobs.get()} jobs")
+    val (ran, jobs) = withJobCount(GoldJob.runCycle(cat, Some(3L)))
+    assert(ran)
+    assert(jobs > 0)
+    assert(jobs < PerTableJobs, s"$jobs jobs")
+    assert(jobs <= SharedFrameJobs, s"$jobs jobs")
     // and no more than with the dense cells decided on the driver: caching
     // the statistics frame again, or running a job for the culled count or
     // the dense summary rows, would pass the bounds above
-    assert(jobs.get() <= DriverDecidedJobs, s"${jobs.get()} jobs")
+    assert(jobs <= DriverDecidedJobs, s"$jobs jobs")
     // and no more than with each catalog read opened without a job
-    assert(jobs.get() <= CatalogOpenedJobs, s"${jobs.get()} jobs")
+    assert(jobs <= CatalogOpenedJobs, s"$jobs jobs")
   }
 
   test("no anti join in a pair plan, with or without dense cells") {

@@ -150,8 +150,9 @@ class PlanAuditSpec extends SparkSpec {
       ("the small-graph offload of CC, star CC, PageRank and triangles " +
         "collects only after DriverGraph.fits admits the graph: <=4M " +
         "edges and <=8M nodes, from counts the callers already take " +
-        "(PageRank: its caller's edge-count upper bound; no hint, no " +
-        "collect)"),
+        "(CC and star CC: <=4M raw pairs, counted on the pin of the pair " +
+        "list the collect reads, so <=8M endpoints; PageRank: its " +
+        "caller's edge-count upper bound; no hint, no collect)"),
     "gold/GoldJob.scala" ->
       ("a capped cellGrid collects its per-cell statistics through " +
         "limit(MaxStatsCells + 1): at most 4096 rows of five narrow " +

@@ -1,8 +1,6 @@
 package graft
 
 import graft.catalog.TableCatalog
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -171,27 +169,6 @@ class TableCatalogSpec extends SparkSpec {
   test("overwriteIfNonEmpty is write-then-publish: an empty snapshot is " +
       "never published and leaves no version dir") {
     writeThenPublish(new TableCatalog(spark, tmpDir("cat-wtp")))
-  }
-
-  /** `open`'s result and the Spark jobs it submitted, counted by job group
-    * as `GoldJobSpec` counts a gold cycle's jobs. */
-  private def withJobCount[A](open: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = "catalog-open-" + java.util.UUID.randomUUID()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties)
-            .exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "catalog open")
-      val out = try open finally sc.clearJobGroup()
-      ListenerBusDrain(sc)
-      (out, jobs.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   test("opening a snapshot submits no Spark job and gives the schema " +
