@@ -98,7 +98,7 @@ object Bench {
     // codegen for stat-dependent plans (measured 3-7× on whichever query
     // ran first). With this pass BOTH timed reps below are fully warm.
     //
-    // KEPT by default after an r13 A/B (VERDICT r12 task 8 explored
+    // KEPT after an r13 A/B (an earlier round explored
     // dropping it on the theory that min-of-2 already lands on the warm
     // rep): back-to-back full sweeps measured a 1.21 MEDIAN per-query
     // min inflation without it, with stream/catalog gates at 2-3×
@@ -106,9 +106,8 @@ object Bench {
     // and first-warm executions still carry staged-cache/checkpoint
     // second-order cold costs), while the wall saving was only ~10%
     // (12.7 vs 14.0 min locally). Negative result recorded in
-    // BASELINE.md; SPARK_GRAFT_BENCH_WARM2=0 skips the pass for A/B.
-    if (!sys.env.get("SPARK_GRAFT_BENCH_WARM2").contains("0"))
-      inventory.foreach { case (_, fn) => runOnce(fn, sfDir) }
+    // BASELINE.md.
+    inventory.foreach { case (_, fn) => runOnce(fn, sfDir) }
     // HOST-WINDOW CANARY (self-identifying degraded records): the box this
     // runs on has documented multi-hour degradation windows where an
     // IDENTICAL binary reads 157.9 vs 201.1s (BASELINE.md "Box-variance

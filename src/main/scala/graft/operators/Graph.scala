@@ -121,7 +121,7 @@ object Graph {
     // policy applied to batch): the adjacency build concentrates |E|
     // edges into collect_list aggregation tasks, and at a FIXED width
     // the per-task array mass grows with the corpus until it OOMs (the
-    // sf100 probe needed a hand-set SPARK_GRAFT_SHUFFLE=128 + 24g).
+    // sf100 probe needed a hand-set 128-partition width and a 24g heap).
     // Width grows as ceil(|E| / RowsPerPart) above the session floor, so
     // every recorded plan ≤ sf10 is untouched and the third decade gets
     // the layout it needs with no env override. The pin, the repartition

@@ -10,10 +10,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * exchange concentrates ~19M rows per sort/aggregate task — external
   * sort spill goes superlinear and collect_list-style aggregations OOM
   * outright (`graph_pagerank` completed at sf100 only under a hand-set
-  * SPARK_GRAFT_SHUFFLE=128 + 24g). The fix belongs in the ENGINE: scale
-  * the width of the known-heavy exchanges with the data flowing through
-  * them, exactly as `StreamScale.parts` scales replay partitions with
-  * the corpus.
+  * 128-partition session width and a 24g heap). The fix belongs in the
+  * ENGINE: scale the width of the known-heavy exchanges with the data
+  * flowing through them, exactly as `StreamScale.parts` scales replay
+  * partitions with the corpus.
   *
   * The contract mirrors StreamScale's: `floor` is the session's
   * configured width (the value every recorded basis ≤ sf10 was measured
@@ -81,8 +81,6 @@ object BatchScale {
     * floor, so NO conf is emitted and the plan basis is byte-identical
     * to every recorded run; at sf100 (~17 GB) it opens to ~540 and the
     * third-decade heavies get their layout with no env override.
-    * `SPARK_GRAFT_INIT_PARTS=0` recovers the fixed-width-off posture,
-    * any other value pins it, both for A/B.
     *
     * `floor` is the session's exchange width (`spark.sql.shuffle
     * .partitions`, AQE's own default for this knob); emitting nothing at
@@ -91,15 +89,9 @@ object BatchScale {
     */
   def aqeWidthConfs(sfDir: String, floor: Int): Seq[(String, String)] = {
     val key = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
-    sys.env.get("SPARK_GRAFT_INIT_PARTS") match {
-      case Some("0") => Nil
-      case Some(n)   => Seq(key -> n)
-      case None =>
-        val bytes = dirBytes(sfDir)
-        val scaled = ((bytes + (32L << 20) - 1) / (32L << 20))
-          .min(1024L).toInt
-        if (scaled <= floor) Nil else Seq(key -> scaled.toString)
-    }
+    val scaled = ((dirBytes(sfDir) + (32L << 20) - 1) / (32L << 20))
+      .min(1024L).toInt
+    if (scaled <= floor) Nil else Seq(key -> scaled.toString)
   }
 
   /** Total bytes under `dir` (recursive; 0 when absent) — the corpus

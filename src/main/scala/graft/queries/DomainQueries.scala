@@ -4,6 +4,7 @@ import graft.{NamedQuery, Tables}
 import graft.functions.GeoFunctions._
 import graft.functions.RiskPolicy
 import graft.functions.TextFunctions._
+import graft.streaming.Scratch
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -369,13 +370,7 @@ object DomainQueries {
     "partition_pruned_scan", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        // per-sfDir catalog root: bench (sf0.1) and verify (sf0.01) runs
-        // must not clobber each other's versions; per-PID so two harness
-        // JVMs (sbt test + a concurrent bench) never co-write one catalog
-        // root — the catalog is single-writer by contract
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_prune_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("prune", d)
         val cat = new TableCatalog(s, root)
         cat.overwrite(Tables.customer(s, d), "silver", "customer_by_segment",
           partitionBy = Seq("c_mktsegment"))
@@ -403,9 +398,7 @@ object DomainQueries {
     "catalog_merge_upsert", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_merge_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("merge", d)
         val cat = new TableCatalog(s, root)
         val orders = Tables.orders(s, d)
         val base = orders.filter(col("o_orderkey") % 10 < 8)
@@ -449,9 +442,7 @@ object DomainQueries {
     "catalog_time_travel", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_tt_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("tt", d)
         val cat = new TableCatalog(s, root)
         val orders = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -498,9 +489,7 @@ object DomainQueries {
     "catalog_time_travel_ts", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_ttts_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("ttts", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root)
@@ -563,9 +552,7 @@ object DomainQueries {
     "catalog_schema_evolve", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_evo_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("evo", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root)
@@ -618,9 +605,7 @@ object DomainQueries {
     "catalog_concurrent_append", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_occ_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("occ", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         // keepVersions covers all six commits so a retry can always
@@ -666,9 +651,7 @@ object DomainQueries {
     "catalog_compact_roundtrip", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_compact_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("compact", d)
         val cat = new TableCatalog(s, root)
         val li = Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
@@ -706,9 +689,7 @@ object DomainQueries {
       (s, d) => {
         import graft.catalog.TableCatalog
         import graft.operators.Layout
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_skip_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("skip", d)
         val cat = new TableCatalog(s, root)
         val li = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_linenumber"), col("l_partkey"),
@@ -784,9 +765,7 @@ object DomainQueries {
     "catalog_change_feed", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_cdf_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("cdf", d)
         val cat = new TableCatalog(s, root)
         val orders = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -842,9 +821,7 @@ object DomainQueries {
       (s, d) => {
         import graft.catalog.TableCatalog
         import graft.operators.Incremental
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_ivm_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("ivm", d)
         val cat = new TableCatalog(s, root)
         val orders = Tables.orders(s, d)
           .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
@@ -890,9 +867,7 @@ object DomainQueries {
     "catalog_delete_where", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_del_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("del", d)
         val cat = new TableCatalog(s, root)
         cat.overwrite(
           Tables.orders(s, d).repartitionByRange(8, col("o_orderkey")),
@@ -926,9 +901,7 @@ object DomainQueries {
     "catalog_update_set", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_upd_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("upd", d)
         val cat = new TableCatalog(s, root)
         cat.overwrite(
           Tables.orders(s, d).repartitionByRange(8, col("o_orderkey")),
@@ -1225,9 +1198,7 @@ object DomainQueries {
     "catalog_unique_constraint", {
       (s, d) => {
         import graft.catalog.{TableCatalog, ConstraintViolationException}
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_uk_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("uk", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1270,9 +1241,7 @@ object DomainQueries {
     "catalog_history", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_hist_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("hist", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1316,9 +1285,7 @@ object DomainQueries {
     "catalog_clone", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_clone_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("clone", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1424,9 +1391,7 @@ object DomainQueries {
     "catalog_generated_columns", {
       (s, d) => {
         import graft.catalog.{TableCatalog, ConstraintViolationException}
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_gen_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("gen", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1743,9 +1708,7 @@ object DomainQueries {
     "catalog_vacuum", {
       (s, d) => {
         import graft.catalog.{TableCatalog, VacuumedVersionException}
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_vac_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("vac", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1789,9 +1752,7 @@ object DomainQueries {
     "catalog_restore", {
       (s, d) => {
         import graft.catalog.TableCatalog
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_res_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("res", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)
@@ -1835,9 +1796,7 @@ object DomainQueries {
     "catalog_check_constraint", {
       (s, d) => {
         import graft.catalog.{TableCatalog, ConstraintViolationException}
-        val root = s"${System.getProperty("java.io.tmpdir")}/graft_chk_" +
-          s"${ProcessHandle.current().pid()}_" +
-          d.replaceAll("[^A-Za-z0-9.]", "_")
+        val root = Scratch.sfRoot("chk", d)
         org.apache.hadoop.fs.FileSystem.get(s.sparkContext.hadoopConfiguration)
           .delete(new org.apache.hadoop.fs.Path(root), true)
         val cat = new TableCatalog(s, root, keepVersions = 10)

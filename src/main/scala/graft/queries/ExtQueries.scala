@@ -5,6 +5,7 @@ import graft.functions.TextFunctions._
 import graft.operators.{Dedup, Similarity}
 import graft.multimodal.Multimodal
 import graft.sources.Warc
+import graft.streaming.Scratch
 import org.apache.spark.sql.functions._
 
 /** North-star extension operators (BASELINE.json / builder brief): the
@@ -520,9 +521,10 @@ object ExtQueries {
 
   /** Production ANN point: 7 OR-amplified tables × 8 bits with 2-bit
     * multi-probe — measured 93-97% recall@10 on the driver corpus family
-    * (RecallProbe) vs 7-20% for a single 8-bit table, probing ~14% of the
-    * bucket space. Fully hash-gated via materialized signatures: the query
-    * materializes the 56-bit hyperplane signature per vector (the one
+    * (COVERAGE.md, "ANN recall vs probe cost") vs 7-20% for a single 8-bit
+    * table, probing ~14% of the bucket space. Fully hash-gated via
+    * materialized signatures: the query materializes the 56-bit
+    * hyperplane signature per vector (the one
     * seeded-hash step), and the oracle re-derives the candidate set in
     * DuckDB from first principles — a corpus row is a candidate iff its
     * 8-bit chunk is within hamming 2 of the query's chunk in ANY of the 7
@@ -655,9 +657,10 @@ object ExtQueries {
     Some(topkOracle))
 
   /** Production PQ point: 8 subspaces × 32 sample centroids, 100-candidate
-    * exact re-rank — 29/30 recall@10 on the driver corpus family (PqProbe
-    * sweep; random vectors are the adversarial case, no cluster structure
-    * to exploit) while the codes table is 32× smaller than the raw vectors
+    * exact re-rank — 13/30 recall@10 on the driver corpus family
+    * (COVERAGE.md, "PQ recall vs code size and re-rank budget"; random
+    * vectors are the adversarial case, no cluster structure to exploit)
+    * while the codes table is 32× smaller than the raw vectors
     * (8 bytes vs 256), which is what makes the candidate scan affordable
     * when the corpus no longer fits as full-precision floats. Fully
     * hash-gated via the materialized codebook: seed SELECTION (smallest
@@ -976,8 +979,7 @@ object ExtQueries {
         Similarity.pqCodebook(emb, dims = 64, m = 8, ksub = 32),
         d, "ivfpqi_codebook")
       val corpus = emb.select(col("vec_id"), col("embedding"))
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_annidx_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val root = Scratch.freshRoot("annidx")
       val cat = new graft.catalog.TableCatalog(s, root)
       val feed = graft.streaming.FileReplay(s, corpus.schema)
       def run(): Unit = {

@@ -3,7 +3,7 @@ package graft.queries
 import java.sql.Timestamp
 
 import graft.{NamedQuery, Tables}
-import graft.streaming.{FileReplay, ReplaySink, Sessionize, SilverJob}
+import graft.streaming.{FileReplay, ReplaySink, Scratch, Sessionize, SilverJob}
 import graft.streaming.ReplaySink.DatasetReplayOps
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -336,8 +336,7 @@ object StreamQueries {
       val (lo, hi) = eventsTsBounds(s, d)
       val splitTs = lo + (hi - lo) / 2
       val feed = FileReplay(s, corpus.schema)
-      val outDir = s"${System.getProperty("java.io.tmpdir")}/graft_upd_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val outDir = Scratch.freshRoot("upd")
       val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions",
         replayParts(s, d, cap = 8).toString)
@@ -769,8 +768,7 @@ object StreamQueries {
       val correction = orders.filter(col("o_orderkey") % 10 >= 5)
         .withColumn("o_totalprice", col("o_totalprice") * 2.0)
         .withColumn("rev", lit(2L))
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_mstream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val root = Scratch.freshRoot("mstream")
       val cat = new graft.catalog.TableCatalog(s, root)
       val feed = FileReplay(s, base.schema)
       // two RUNS over one checkpoint, not two triggers of one run: the
@@ -843,8 +841,7 @@ object StreamQueries {
       val correction = orders.filter(col("o_orderkey") % 10 >= 5)
         .withColumn("o_totalprice", col("o_totalprice") * 2.0)
         .withColumn("rev", lit(2L))
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_ivmstream_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val root = Scratch.freshRoot("ivmstream")
       val cat = new graft.catalog.TableCatalog(s, root)
       val feed = FileReplay(s, base.schema)
       def run(): Unit = SilverJob.startIncrementalGoldSink(
@@ -1539,8 +1536,7 @@ object StreamQueries {
         .select(col("event_id"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
       val feed = FileReplay(s, ev.schema)
-      val root = s"${System.getProperty("java.io.tmpdir")}/graft_backfill_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
+      val root = Scratch.freshRoot("backfill")
       def run(): Unit = {
         val q = feed.stream.writeStream
           .format("parquet")

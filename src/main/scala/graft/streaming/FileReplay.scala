@@ -145,8 +145,7 @@ object FileReplay {
     * of every batch that will be staged.
     */
   def apply(spark: SparkSession, schema: StructType): FileReplay = {
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_replay_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    val root = Paths.get(Scratch.freshRoot("replay"))
     Files.createDirectories(root.resolve("in"))
     new FileReplay(spark, schema, root)
   }
@@ -161,9 +160,7 @@ object FileReplay {
   private val cache = new java.util.concurrent.ConcurrentHashMap[String, Path]()
 
   private lazy val cacheRoot: Path = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_replay_cache_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
+    val p = Paths.get(Scratch.freshRoot("replay_cache"))
     Files.createDirectories(p)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       def rm(x: Path): Unit = {

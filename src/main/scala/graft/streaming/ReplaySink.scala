@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.StructType
   *    `format("memory")` sink. The driver-visible result table is what the
   *    gate hashes against DuckDB; its per-micro-batch `collect()` is part
   *    of the HARNESS, priced acceptable because correctness runs once.
-  *  - ENGINE-ONLY runs (`engineOnly = true`, set by `graft.Bench` alone):
+  *  - ENGINE-ONLY runs (`engineOnly = true`, set by the timing mains):
   *    Spark's native parquet `FileStreamSink`. Every micro-batch commits
   *    its output distributed (executor-written part files + the
   *    `_spark_metadata` exactly-once manifest) and NOTHING crosses the
@@ -100,9 +100,7 @@ object ReplaySink {
   private val pending = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   private lazy val root: Path = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_replay_sink_" +
-        java.util.UUID.randomUUID().toString.replace("-", ""))
+    val p = Paths.get(Scratch.freshRoot("replay_sink"))
     Files.createDirectories(p)
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       try rm(p) catch { case _: Throwable => () }

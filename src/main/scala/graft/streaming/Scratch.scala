@@ -56,6 +56,25 @@ object Scratch {
       if (Files.isDirectory(mine)) mine.toString else root)
   }
 
+  /** A query's catalog or stream scratch root,
+    * `<tmpdir>/graft_<tag>_<pid>_<sfDir with [^A-Za-z0-9.] as _>`.
+    * Per-sfDir so bench (sf0.1) and verify (sf0.01) runs never clobber each
+    * other's versions; per-PID so two harness JVMs (sbt test + a
+    * concurrent bench) never co-write one catalog root — the catalog is
+    * single-writer by contract. `java.io.tmpdir` is read per call, so
+    * after `install()` the root lands in the per-PID dir the sweep
+    * reclaims once its owner is dead.
+    */
+  def sfRoot(tag: String, sfDir: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
+      s"${ProcessHandle.current().pid()}_" +
+      sfDir.replaceAll("[^A-Za-z0-9.]", "_")
+
+  /** A fresh one-shot scratch root, `<tmpdir>/graft_<tag>_<uuid>`. */
+  def freshRoot(tag: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
+
   /** Best-effort removal of this harness's own stale scratch dirs:
     *  - `graft_pid<pid>` dirs whose owning process is dead (the normal
     *    case; PID liveness, not age, is the ownership test);

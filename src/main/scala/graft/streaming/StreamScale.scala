@@ -7,10 +7,11 @@ package graft.streaming
   * store instance commits a delta file per trigger (a stream-stream join
   * carries FOUR stores per partition), and the empty-batch profile shows
   * that floor dominating small replays: a 0-row no-data batch still costs
-  * ~0.7 s at 4 partitions (ProfileSSJoin, `commitMs` ≈ 60-130 ms per
-  * store commit), and an interleaved same-JVM A/B measured the whole
-  * replay ~29% faster at 1 partition than 4 at sf0.1. Fixed partition
-  * counts therefore OVER-partition small corpora — pure floor, no
+  * ~0.7 s at 4 partitions (BASELINE.md, "Streaming-replay floor";
+  * `commitMs` ≈ 60-130 ms per store commit), and an interleaved same-JVM
+  * A/B measured the whole replay ~29% faster at 1 partition than 4 at
+  * sf0.1. Fixed partition counts therefore OVER-partition small
+  * corpora — pure floor, no
   * parallelism payoff — while a count that grows with the corpus keeps
   * the sf10 plans at their measured optimum.
   *

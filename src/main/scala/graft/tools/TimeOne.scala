@@ -11,37 +11,25 @@ object TimeOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
     graft.streaming.Scratch.install()
-    // SPARK_GRAFT_SHUFFLE: partition-count override for scale sweeps — a
-    // fixed 32-partition layout is the bench contract at sf0.1, but at
-    // sf10 per-partition state is 100× that design point and the sweep
-    // needs to separate "algorithm superlinear" from "layout starved"
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    // SPARK_GRAFT_MAXRESULT: the streaming replays sink through
-    // format("memory"), whose per-microbatch collect is O(query OUTPUT) on
-    // the driver — at sf10 a session-window result alone exceeds the 1g
-    // default maxResultSize. That caps the TEST HARNESS (a production sink
-    // writes distributed), so the scale sweep may raise it; the bench
-    // contract at sf0.1 stays at the 1g default.
-    val maxResult = sys.env.getOrElse("SPARK_GRAFT_MAXRESULT", "1g")
+    // fixed session width; larger corpora widen exchanges through
+    // BatchScale.aqeWidthConfs below
+    val shuffle = 32
     val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.driver.maxResultSize", maxResult)
+      .config("spark.sql.shuffle.partitions", shuffle.toString)
+      .config("spark.driver.maxResultSize", "1g")
       .config("spark.hadoop.fs.file.impl",
         "graft.streaming.NioLocalFileSystem")
       .config("spark.ui.enabled", "false")
       // data-scaled AQE exchange width (BatchScale.aqeWidthConfs scaladoc)
-      .config(graft.plans.BatchScale.aqeWidthConfs(sfDir, shuffle.toInt).toMap)
+      .config(graft.plans.BatchScale.aqeWidthConfs(sfDir, shuffle).toMap)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // timing microscope, not a verify run: skip oracle-sidecar writes
     graft.OracleSidecar.enabled = false
-    // SPARK_GRAFT_ENGINE_ONLY=0 keeps the memory-sink oracle path for
-    // harness-vs-engine A/B; the default matches Bench (engine-only
-    // replay sinks — the memory sink's O(output) driver collect is the
-    // documented measurement artifact this mode removes, and the reason
-    // SPARK_GRAFT_MAXRESULT no longer needs raising at sf10)
-    graft.streaming.ReplaySink.engineOnly =
-      sys.env.getOrElse("SPARK_GRAFT_ENGINE_ONLY", "1") != "0"
+    // engine-only replay sinks, as in Bench: the memory sink's O(output)
+    // driver collect is a harness artifact, and without it the default 1g
+    // maxResultSize holds at every SF
+    graft.streaming.ReplaySink.engineOnly = true
     // comma-separated names time each in sequence (shared warm JVM)
     for (nm <- name.split(",")) {
       val fn = graft.SparkEntry.queries(nm)

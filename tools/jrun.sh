@@ -1,8 +1,11 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains: skips sbt startup (~25 s/invocation).
 # Usage: tools/jrun.sh <mainClass> [args...]   (SPARK_DRIVER_MEM honored)
+# Runs the classes of the checkout this script sits in (build them first
+# with `sbt compile`), so two checkouts can be timed side by side.
 set -eu
-CP="/root/repo/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+REPO="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+CP="$REPO/target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 exec java \
   --add-opens java.base/java.lang=ALL-UNNAMED \
   --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
